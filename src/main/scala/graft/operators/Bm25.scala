@@ -278,140 +278,46 @@ object Bm25 {
     grown
   }
 
-  /** [[appendToIndex]] under the batch-marker replay protocol — the
-    * family discipline [[graft.operators.Pq.appendBatch]] established for
-    * the ANN index, applied verbatim to the posting index (r11 verdict
-    * #3; [[appendToIndex]]'s scaladoc already named this as the
-    * production answer to its stats-write crash window):
-    *  - a non-empty `_batches/day-<batchId>` marker (or an admissible
-    *    legacy bare one — [[graft.streaming.Markers]] owns the rule) →
-    *    the batch is applied; a replayed day no-ops (-1) instead of
-    *    double-appending postings
+  /** [[appendToIndex]] under the batch-marker replay protocol
+    * [[graft.streaming.Markers.claimBatch]] shared with the ANN index
+    * ([[Pq.appendBatch]]) — the production answer to
+    * [[appendToIndex]]'s stats-write crash window:
+    *  - a non-empty `_batches/<namespace>-<batchId>` marker → the batch
+    *    is applied; a replay no-ops (-1) instead of double-appending
+    *    postings. The DAG claims `day-<id>`, the live grow leg
+    *    ([[graft.streaming.StreamBm25Grow]]) `mb-<id>`;
     *  - the first batch (or a day-one replay whose attempt died before
     *    the marker) BUILDS via [[writeIndex]] — overwrite is exactly-once
-    *    where appending would duplicate
-    *  - append attempts record a `.pre` data-file manifest before
-    *    claiming; a claimed-but-dead batch self-heals (retries) only when
-    *    the manifest proves nothing landed, otherwise reads RED for the
-    *    operator (manual repair, as with the ANN index)
-    * Returns rows (docs) applied; -1 for a replay / unrepairable claim;
-    * or [[graft.streaming.Markers.BareClaimDrop]] (-2) when the no-op
-    * resolved to a LEGACY BARE marker this producer did not write — a
-    * one-batch data drop a monitoring hook must distinguish from a
-    * replay (r17 verdict #2).
+    *    where appending would duplicate;
+    *  - appends run under the mutation lease: the `_stats` update is a
+    *    read-modify-write, so two unleased producers' appends would lose
+    *    one side's (n, tt) delta;
+    *  - a claimed-but-dead batch self-heals only when its `.pre` manifest
+    *    proves nothing landed, otherwise reads RED for the operator.
+    * Returns rows (docs) applied; -1 for a replay / unrepairable claim.
     */
   def appendBatch(
       spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
       indexDir: String, batchId: Long, buckets: Int = 64,
       namespace: String = "day",
       leaseMaxWaitMs: Long = graft.sources.BuildLock.DefaultMaxWaitMs,
-      leaseMs: Long = graft.sources.BuildLock.DefaultLeaseMs): Long = {
-    // markers route through graft.streaming.Markers (r15, with the ANN
-    // index): the DAG claims `day-<id>`, the live grow leg
-    // ([[graft.streaming.StreamBm25Grow]], r16) claims `mb-<id>`, and
-    // legacy bare ids stay honored under the migration rule — two
-    // producers share this index without the bare-namespace shadowing
-    // bug class
-    val ns = namespace
-    graft.streaming.Markers.ensureMigrationBound(spark, indexDir)
-    val conf = spark.sessionState.newHadoopConf()
-    val marker = graft.streaming.Markers.markerPath(indexDir, batchId, ns)
-    val pre = new org.apache.hadoop.fs.Path(
-      marker.getParent, marker.getName + ".pre")
-    val fs = marker.getFileSystem(conf)
-    // fast replay no-op BEFORE the mutation lease (an applied marker is
-    // immutable — no serialization needed; a replay never queues behind
-    // a live append)
-    graft.streaming.Markers.existingMarker(fs, indexDir, batchId, ns)
-      .foreach { m =>
-        try {
-          if (fs.getFileStatus(m).getLen > 0) {
-            // a bare-marker claim of a NON-day batch is a data drop, not
-            // a replay — make it loud (Markers.warnIfBareClaim doc)
-            if (graft.streaming.Markers.warnIfBareClaim(m, ns, batchId))
-              return graft.streaming.Markers.BareClaimDrop // -2: data drop, not replay
-            return -1L
-          }
-        }
-        catch { case _: java.io.FileNotFoundException => () } // inspect below
-      }
-    def commitMarker(n: Long): Unit = {
-      fs.mkdirs(marker.getParent)
-      val out = fs.create(marker, true)
-      out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-    }
-    val built = new org.apache.hadoop.fs.Path(s"$indexDir/_stats")
-    val batchesDir = marker.getParent
-    def anyApplied(): Boolean = fs.exists(batchesDir) && fs.listStatus(batchesDir)
-      .exists(st => graft.streaming.Markers.isBatchMarker(st.getPath.getName))
-    def buildBranch(): Long = {
-      val n = docs.filter(col("text").isNotNull).count()
-      if (n == 0L) { commitMarker(0L); return 0L }
-      writeIndex(docs, indexDir, buckets)
-      commitMarker(n)
-      n
-    }
-    def appendBranch(): Long = {
-      val idx = readIndex(spark, indexDir)
-      require(idx.buckets == buckets,
-        s"appendBatch: index at $indexDir was built with ${idx.buckets} " +
-          s"buckets, append requested $buckets — postings would route to " +
-          "the wrong partitions")
-      fs.mkdirs(marker.getParent)
-      val out = fs.create(pre, true)
-      out.write(Pq.dataFileManifest(fs, indexDir)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-      fs.create(marker, true).close() // claim (empty = not yet applied)
-      val grown = appendToIndex(idx, docs)
-      val n = grown.n - idx.n
-      commitMarker(n)
-      fs.delete(pre, false)
-      n
-    }
-    // EVERY mutation runs under the artifact's build lease (the
-    // Pq.appendBatch r16 discipline): with the live grow leg
-    // (StreamBm25Grow) beside the DAG, two producers can race the
-    // day-one build (both would overwrite the root) AND two appends can
-    // interleave — the `_stats` update is a read-modify-write, so an
-    // unleased concurrent append LOSES one side's (n, tt) delta and the
-    // idf/length normalization drifts from the corpus forever after.
-    // The race loser of the day-one decision re-evaluates under the
-    // lease and appends onto the winner's index. Probes stay lock-free.
-    graft.sources.BuildLock.withLease(
-      spark, indexDir, "BM25 index mutation",
-      leaseMs = leaseMs, maxWaitMs = leaseMaxWaitMs, mutation = true) {
-      // adjudicate dead claims while their manifest proofs are still
-      // valid — this append's files would destroy them (crash-fuzz r18)
-      graft.streaming.Markers.healDeadClaims(fs, indexDir)
-      graft.streaming.Markers.existingMarker(fs, indexDir, batchId, ns)
-        .foreach { m =>
-          // claimed-state inspection under the lease (it may delete a
-          // dead claim; the .pre proof must not race a landing append).
-          // A marker vanishing since the fast check means a concurrent
-          // replayer healed it — it owns the retry: no-op.
-          try {
-            if (fs.getFileStatus(m).getLen > 0) { // applied replay
-              if (graft.streaming.Markers.warnIfBareClaim(m, ns, batchId))
-                return graft.streaming.Markers.BareClaimDrop // -2: data drop
-              return -1L
-            }
-            val mPre = new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".pre")
-            val safe = fs.exists(mPre) && {
-              val in = fs.open(mPre)
-              val recorded = try new String(in.readAllBytes(),
-                java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-              recorded == Pq.dataFileManifest(fs, indexDir)
-            }
-            if (!safe) return -1L
-            fs.delete(m, false) // provably nothing landed: retry, namespaced
-            fs.delete(mPre, false)
-          } catch { case _: java.io.FileNotFoundException => return -1L }
-        }
-      if (!fs.exists(built) || !anyApplied()) buildBranch() else appendBranch()
-    }
-  }
+      leaseMs: Long = graft.sources.BuildLock.DefaultLeaseMs): Long =
+    graft.streaming.Markers.claimBatch(spark, indexDir, batchId, namespace,
+      "_stats", "BM25 index mutation", leaseMs, leaseMaxWaitMs)(
+      build = () => {
+        val n = docs.filter(col("text").isNotNull).count()
+        if (n > 0L) writeIndex(docs, indexDir, buckets)
+        n
+      },
+      validate = () => {
+        val idx = readIndex(spark, indexDir)
+        require(idx.buckets == buckets,
+          s"appendBatch: index at $indexDir was built with ${idx.buckets} " +
+            s"buckets, append requested $buckets — postings would route to " +
+            "the wrong partitions")
+        idx
+      },
+      append = (idx: Bm25Index) => appendToIndex(idx, docs).n - idx.n)
 
   /** Non-empty-marker gate, the ANN index's [[Pq.appendBatchApplied]]
     * twin: TRUE only for a batch that provably committed.

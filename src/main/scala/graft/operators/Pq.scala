@@ -419,37 +419,19 @@ object Pq {
     * discipline, so a pipeline (LlmIngestDag) can grow the ANN index
     * alongside the minhash one with the same replay semantics: day one
     * BUILDS the index (train + [[writeIndex]]); every later day appends
-    * under the frozen model; a `_batches/day-<batchId>` marker makes each
-    * batch apply at most once (a replayed day is a no-op). Markers route
-    * through [[graft.streaming.Markers]] (r15): claims are
-    * producer-namespaced, and pre-migration bare `_batches/<id>` markers
-    * stay honored under its day-bound rule.
+    * under the frozen model; a `_batches/<namespace>-<batchId>` marker
+    * makes each batch apply at most once (a replayed day is a no-op).
+    * The DAG claims `day-<id>`, the live grow leg
+    * ([[graft.streaming.StreamAnnGrow]]) `mb-<id>`.
     *
-    * Crash protocol (r10, tightened by the self-review):
-    *  - Build vs append is decided by whether ANY batch marker exists —
-    *    NOT by the `_centroids` sidecar: [[writeIndex]] is an idempotent
-    *    overwrite, so a day-one crash between the index write and its
-    *    marker REBUILDS on replay instead of detouring into the append
-    *    branch and duplicating every day-one vector.
-    *  - Appends record the pre-append data-file manifest in a
-    *    `<batchId>.pre` sidecar, then claim the batch with an EMPTY
-    *    marker, then write, then rewrite the marker with the applied row
-    *    count. On re-entry an EMPTY marker (a crashed attempt) is
-    *    SELF-HEALING in the common case (r10 ADVICE): the retry compares
-    *    the current manifest to the `.pre` snapshot — identical means the
-    *    failed write committed nothing (the Spark commit protocol's
-    *    failure guarantee), so the append simply re-runs; a changed
-    *    manifest is the narrow commit-vs-marker window where data DID
-    *    land, and only that case returns -1 with the gate red for manual
-    *    repair (delete the marker after confirming/undoing the partial
-    *    day). A gate must trust only a NON-EMPTY marker
-    *    ([[appendBatchApplied]]) — an empty one is a claimed-but-dead
-    *    batch that bare `exists` would report as silently green.
-    * Returns rows applied; -1 for a replay / an unrepairable claim; or
-    * [[graft.streaming.Markers.BareClaimDrop]] (-2) when the no-op
-    * resolved to a LEGACY BARE marker this producer did not write — a
-    * one-batch data drop a monitoring hook must distinguish from a
-    * replay (r17 verdict #2).
+    * The claim protocol, its crash states and the mutation lease are
+    * [[graft.streaming.Markers.claimBatch]]'s, shared with the BM25
+    * index; this supplies the IVF-PQ parts. The lease also serializes
+    * against [[rebuildIfDrifted]]: an append racing its retrain would
+    * write OLD-model codes into the swapped-in NEW-model index, and its
+    * marker would vanish in the swap's marker snapshot. A gate must
+    * trust only a NON-EMPTY marker ([[appendBatchApplied]]).
+    * Returns rows applied; -1 for a replay / unrepairable claim.
     */
   def appendBatch(
       spark: org.apache.spark.sql.SparkSession, emb: DataFrame,
@@ -458,190 +440,42 @@ object Pq {
       namespace: String = "day",
       leaseMaxWaitMs: Long = graft.sources.BuildLock.DefaultMaxWaitMs,
       leaseMs: Long = graft.sources.BuildLock.DefaultLeaseMs): Long = {
-    // markers are producer-namespaced through graft.streaming.Markers
-    // (r14 verdict: single-producer today, but the moment a live ANN-grow
-    // leg lands beside the DAG, a shared bare numeric namespace reopens
-    // the StreamNearDup shadowing bug class — migrate while every
-    // existing bare marker has exactly one producer). The DAG claims
-    // `day-<id>`; the live grow leg ([[graft.streaming.StreamAnnGrow]],
-    // r16) claims `mb-<id>` — ids only need to be unique within their
-    // producer, and legacy bare ids stay honored under the migration
-    // rule (`mb` claims every bare id; `day` only up to the bound).
-    val ns = namespace
-    graft.streaming.Markers.ensureMigrationBound(spark, indexDir)
-    val conf = spark.sessionState.newHadoopConf()
-    val marker = graft.streaming.Markers.markerPath(indexDir, batchId, ns)
-    val pre = new org.apache.hadoop.fs.Path(
-      marker.getParent, marker.getName + ".pre")
-    val fs = marker.getFileSystem(conf)
-    // fast replay no-op BEFORE the mutation lease: an applied (non-empty)
-    // marker is immutable, so this read needs no serialization and a
-    // checkpoint replay never queues behind a live rebuild/append
-    graft.streaming.Markers.existingMarker(fs, indexDir, batchId, ns)
-      .foreach { m =>
-        try {
-          if (fs.getFileStatus(m).getLen > 0) {
-            // a bare-marker claim of a NON-day batch is a data drop, not
-            // a replay — make it loud (Markers.warnIfBareClaim doc)
-            if (graft.streaming.Markers.warnIfBareClaim(m, ns, batchId))
-              return graft.streaming.Markers.BareClaimDrop // -2: data drop, not replay
-            return -1L
-          }
+    val layout = Map("nlist" -> nlist.toString, "m" -> m.toString, "k" -> k.toString)
+    graft.streaming.Markers.claimBatch(spark, indexDir, batchId, namespace,
+      "_centroids", "IVF-PQ index mutation", leaseMs, leaseMaxWaitMs,
+      // a crashed rebuild swap must never be read as "no markers" (the
+      // silent single-day rebuild)
+      heal = () => healStagedRebuild(spark, indexDir))(
+      build = () => {
+        // day one may be smaller than the target cell count — cap nlist
+        // (and the codebook size) at what exists; probing a small index
+        // is then exhaustive, and the cell layout grows into its skew
+        val n = emb.filter(col(vecCol).isNotNull).count()
+        if (n > 0L) { // an empty day one marks and builds nothing
+          writeIndex(emb, idCol, vecCol,
+            train(emb, idCol, vecCol, m, math.min(k.toLong, n).toInt),
+            indexDir, math.min(nlist.toLong, n).toInt)
+          // layout stamp (graft.sources.IndexConf) — AFTER writeIndex,
+          // whose root-level overwrite would wipe a pre-written stamp.
+          // REQUESTED values are stamped, not the capped ones: producers
+          // coordinate on what they ask for
+          graft.sources.IndexConf.stamp(spark, indexDir, layout)
         }
-        catch { case _: java.io.FileNotFoundException => () } // inspect below
-      }
-    def commitMarker(n: Long): Unit = {
-      fs.mkdirs(marker.getParent)
-      val out = fs.create(marker, true)
-      out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-    }
-    val built = new org.apache.hadoop.fs.Path(s"$indexDir/_centroids")
-    val batchesDir = marker.getParent
-    def anyApplied(): Boolean = fs.exists(batchesDir) && fs.listStatus(batchesDir)
-      .exists(st => graft.streaming.Markers.isBatchMarker(st.getPath.getName))
-    def buildBranch(): Long = {
-      // build branch — also taken on a day-one replay whose first attempt
-      // wrote the index but died before the marker: writeIndex overwrites,
-      // so rebuilding is exactly-once where appending would duplicate
-      // day one may be smaller than the target cell count — cap nlist (and
-      // the codebook size) at what exists; probing a small index is then
-      // exhaustive, and the cell layout grows into its skew from there
-      val n = emb.filter(col(vecCol).isNotNull).count()
-      if (n == 0L) { // nothing to build an index FROM — mark and move on
-        commitMarker(0L)
-        return 0L
-      }
-      val effNlist = math.min(nlist.toLong, n).toInt
-      val effK = math.min(k.toLong, n).toInt
-      writeIndex(emb, idCol, vecCol, train(emb, idCol, vecCol, m, effK),
-        indexDir, effNlist)
-      // layout stamp (graft.sources.IndexConf) — AFTER writeIndex, whose
-      // root-level overwrite would wipe a pre-written stamp. The builder
-      // owns the layout, so this is stamp, not ensure (a day-one replay
-      // just rebuilt every byte under ITS parameters). REQUESTED values
-      // are stamped, not effective ones (effNlist/effK cap at the
-      // day-one corpus size): producers coordinate on what they ask for.
-      graft.sources.IndexConf.stamp(spark, indexDir,
-        Map("nlist" -> nlist.toString, "m" -> m.toString, "k" -> k.toString))
-      commitMarker(n)
-      n
-    }
-    def appendBranch(): Long = appendBranchImpl(
-      spark, emb, idCol, vecCol, indexDir, nlist, m, k,
-      fs, marker, pre, commitMarker)
-    // With a LIVE grow leg beside the DAG (r16, StreamAnnGrow), index
-    // MUTATORS can genuinely overlap — and none of the per-file crash
-    // protocols cover cross-mutator interleavings: two day-one builders
-    // would race writeIndex's root overwrite; an append racing
-    // rebuildIfDrifted's retrain would write OLD-model codes into the
-    // swapped-in NEW-model index (silent corruption) and its marker,
-    // committed mid-rebuild, would vanish in the swap's marker snapshot.
-    // So every mutation — build-vs-append decision included — runs under
-    // the artifact's cross-JVM build lease (the writeIndexOnce lock
-    // path: ad-hoc one-shot builders serialize against ingest too).
-    // Readers stay lock-free (they ride the swap via the sealed-stage
-    // heal, unchanged). A producer that loses the day-one race
-    // re-evaluates under the lease and APPENDS onto the winner's index.
-    graft.sources.BuildLock.withLease(
-      spark, indexDir, "IVF-PQ index mutation",
-      leaseMs = leaseMs, maxWaitMs = leaseMaxWaitMs, mutation = true) {
-      healStagedRebuild(spark, indexDir) // a crashed rebuild swap must
-      // never be read as "no markers" (the silent single-day rebuild)
-      // adjudicate dead claims NOW, while their manifest proofs are
-      // still valid — this append's new files would destroy them
-      // (Markers.healDeadClaims doc; crash-fuzz r18)
-      graft.streaming.Markers.healDeadClaims(fs, indexDir)
-      graft.streaming.Markers.existingMarker(fs, indexDir, batchId, ns)
-        .foreach { m =>
-          // claimed-state inspection under the lease (it may DELETE a
-          // dead claim, and the .pre manifest proof must not race a
-          // concurrent mutator's landing files). A marker vanishing
-          // between the lock-free fast check and here means a concurrent
-          // replayer healed it — it owns the retry: no-op, don't crash
-          // the day.
-          try {
-            if (fs.getFileStatus(m).getLen > 0) { // applied replay
-              if (graft.streaming.Markers.warnIfBareClaim(m, ns, batchId))
-                return graft.streaming.Markers.BareClaimDrop // -2: data drop
-              return -1L
-            }
-            // claimed-but-dead: re-run ONLY if provably nothing landed —
-            // manifest unchanged since the claim. The `.pre` sidecar
-            // lives next to whichever spelling (bare or namespaced)
-            // claimed it. No `.pre` (a legacy or hand-made claim) means
-            // no proof: stay red for the operator.
-            val mPre = new org.apache.hadoop.fs.Path(m.getParent, m.getName + ".pre")
-            val safe = fs.exists(mPre) && {
-              val in = fs.open(mPre)
-              val recorded = try new String(in.readAllBytes(),
-                java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-              recorded == dataFileManifest(fs, indexDir)
-            }
-            if (!safe) return -1L
-            // retry under the NAMESPACED spelling: drop the dead claim
-            // and its proof sidecar (a healed bare claim must not linger)
-            fs.delete(m, false)
-            fs.delete(mPre, false)
-          } catch { case _: java.io.FileNotFoundException => return -1L }
-        }
-      if (!fs.exists(built) || !anyApplied()) buildBranch() else appendBranch()
-    }
+        n
+      },
+      // appends quantize under the PERSISTED frozen model, so the
+      // caller's build-only (nlist, m, k) must match the stamp — a
+      // mismatch fails loudly (the Bm25.appendBatch `buckets`
+      // discipline); a pre-stamp index is stamped with the caller's
+      // values. rebuildIfDrifted stamps its staged tree instead: a
+      // rebuild may legitimately change the layout
+      validate = () => {
+        graft.sources.IndexConf.ensure(spark, indexDir, layout, "IVF-PQ index")
+        readIndex(spark, indexDir)
+      },
+      append = (idx: IvfPqIndex) => appendToIndex(idx, emb, idCol, vecCol)
+        .agg(coalesce(sum(col("n_added")), lit(0L))).collect().head.getLong(0))
   }
-
-  /** The append half of [[appendBatch]] (factored so the day-one build
-    * race can fall through to it): quantizes the delta under the
-    * PERSISTED frozen model and commits the batch marker after the
-    * partitioned append lands.
-    */
-  private def appendBranchImpl(
-      spark: org.apache.spark.sql.SparkSession, emb: DataFrame,
-      idCol: String, vecCol: String, indexDir: String,
-      nlist: Int, m: Int, k: Int,
-      fs: org.apache.hadoop.fs.FileSystem,
-      marker: org.apache.hadoop.fs.Path,
-      pre: org.apache.hadoop.fs.Path,
-      commitMarker: Long => Unit): Long = {
-    {
-      // append branch: quantizes under the PERSISTED frozen model — the
-      // caller's (nlist, m, k) are build-only, so before this check a
-      // caller passing different values was SILENTLY served the frozen
-      // layout. Now the mismatch fails loudly (the Bm25.appendBatch
-      // `buckets` discipline), and a pre-stamp index (built before this
-      // discipline existed) is stamped with the caller's values on first
-      // touch. A rebuild may legitimately change the stamp — it retrains
-      // and rewrites every code — so rebuildIfDrifted stamps its staged
-      // tree instead of validating, and the stamp rides the swap exactly
-      // like the replay markers.
-      graft.sources.IndexConf.ensure(spark, indexDir,
-        Map("nlist" -> nlist.toString, "m" -> m.toString, "k" -> k.toString),
-        "IVF-PQ index")
-      val idx = readIndex(spark, indexDir)
-      fs.mkdirs(marker.getParent)
-      // record what the data dir looked like BEFORE this attempt, so a
-      // crashed attempt's retry can prove "nothing landed" and self-heal
-      val out = fs.create(pre, true)
-      out.write(dataFileManifest(fs, indexDir)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-      fs.create(marker, true).close() // claim (empty = not yet applied)
-      val n = appendToIndex(idx, emb, idCol, vecCol)
-        .agg(coalesce(sum(col("n_added")), lit(0L))).collect().head.getLong(0)
-      commitMarker(n)
-      fs.delete(pre, false)
-      n
-    }
-  }
-
-  /** The crash-proof manifest snapshot — moved to
-    * [[graft.streaming.Markers.dataFileManifest]] beside the claim
-    * semantics it proves things about (so every mutator family can
-    * adjudicate dead claims); this alias keeps the established call
-    * sites and specs.
-    */
-  private[graft] def dataFileManifest(
-      fs: org.apache.hadoop.fs.FileSystem, root: String): String =
-    graft.streaming.Markers.dataFileManifest(fs, root)
 
   /** True iff `batchId` was APPLIED to the index at `indexDir` — the gate
     * a DAG task must use instead of bare marker existence: the marker is

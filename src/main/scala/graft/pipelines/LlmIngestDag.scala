@@ -125,8 +125,7 @@ object LlmIngestDag {
       // index of every prior day (text never re-read), append survivors'
       // band/shingle keys exactly once (day-namespaced epoch-day batch
       // marker — r13 verdict #1: the DAG and the live stream share one
-      // index but must not share one marker namespace; a legacy bare
-      // marker still gates green so a pre-upgrade index never re-runs)
+      // index but must not share one marker namespace)
       Dag.Task("cross_day_neardup", () => {
         StreamNearDup.applyBatch(
           spark, spark.read.parquet(cleanPath), "doc_id", "text",
@@ -261,9 +260,7 @@ object LlmIngestDag {
         }, retries = retries,
           // growBatch appends BEFORE its marker (duplicate keys are benign
           // for the existence-only probe; lost keys are not), so marker
-          // presence == the day's keys landed (day-namespaced, r12 ADVICE;
-          // legacy bare markers still gate green — pre-upgrade indexes
-          // must not re-run their history, r13 ADVICE)
+          // presence == the day's keys landed (day-namespaced, r12 ADVICE)
           gate = () => StreamFingerprint.batchApplied(
             spark, mediaIndexDir, date.toEpochDay, "day")),
 

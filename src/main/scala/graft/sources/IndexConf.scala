@@ -27,9 +27,8 @@ import org.apache.spark.sql.SparkSession
   *    mismatched keys, and both values. Loud beats silent misses.
   *  - `_conf` absent → stamp the caller's parameters. This is both the
   *    creation path and the MIGRATION path (a pre-upgrade index carries
-  *    data but no stamp; first touch trusts the caller — the same
-  *    trust-on-upgrade rule as the legacy bare batch markers, because
-  *    the pre-stamp parameters are not recoverable from the data).
+  *    data but no stamp; first touch trusts the caller, because the
+  *    pre-stamp parameters are not recoverable from the data).
   *  - two racing FIRST stamps cannot both win: same-JVM racers (two
   *    threads of one driver — the realistic pairing, e.g. a live stream
   *    and a DAG leg) are serialized on a monitor, so exactly one stamps
@@ -43,7 +42,7 @@ import org.apache.spark.sql.SparkSession
   *    producers proceeding under different layouts.
   *
   * The file is underscore-prefixed: parquet directory reads, [[Sidecar]],
-  * `Pq.dataFileManifest`, and `Compaction.compactFlat`'s `.parquet`
+  * `Markers.dataFileManifest`, and `Compaction.compactFlat`'s `.parquet`
   * listing all skip it. It lives at the index ROOT (the `bands/`,
   * `shingles/`, `keys/` data subdirs compact/swap beneath it); the one
   * artifact whose root itself swaps — the IVF-PQ staged rebuild — stamps

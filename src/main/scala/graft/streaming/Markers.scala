@@ -3,86 +3,26 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Shared batch-marker resolution for the producer-namespaced indexes
-  * ([[StreamNearDup]] text near-dup, [[StreamFingerprint]] media, and the
-  * DAG-grown ANN/BM25 indexes via `Pq.appendBatch`/`Bm25.appendBatch`) —
-  * one implementation of "is this batch applied?" so the DAG gates and
-  * the apply paths can never drift apart, and the legacy-marker migration
-  * rule lives in exactly one place.
+/** Batch markers of the producer-namespaced indexes ([[StreamNearDup]]
+  * text near-dup, [[StreamFingerprint]] media, and the ANN/BM25 indexes
+  * grown through `Pq.appendBatch`/`Bm25.appendBatch`): one
+  * implementation of "is this batch applied?" and of the claim protocol
+  * ([[claimBatch]]), so the DAG gates and the apply paths can never
+  * drift apart.
   *
-  * == Namespaces ==
-  * Post-upgrade markers are producer-namespaced: `_batches/mb-<id>` for
-  * the live stream's micro-batch counters, `_batches/day-<id>` for the
-  * DAG's epoch days. Ids only need to be unique within their producer.
-  *
-  * == Legacy bare markers (the migration rule) ==
-  * A pre-upgrade index carries bare `_batches/<id>` markers from BOTH
-  * producers, indistinguishable by value. Re-running an applied batch is
-  * catastrophic for these indexes (a day re-run self-hits every doc
-  * against its own index keys and empties the survivor set), so existing
-  * bare markers must stay honored. But claiming EVERY bare id for every
-  * producer forever is not a one-in-N risk — it is systematic: a
-  * pre-upgrade stream whose counter reached N has bare markers 0..N, a
-  * CONTIGUOUS range, and every future ingest day whose epoch day falls
-  * inside it would silently no-op (for `grow_media_index` there is no
-  * downstream read to fail loudly — the index just stops growing).
-  *
-  * The disambiguator is time: a day marker can only exist for a day that
-  * has already happened. On first post-upgrade touch, the migration
-  * sentinel `_batches/_migration` records the CURRENT epoch day; a bare
-  * marker then claims the `day` namespace only for ids ≤ that bound
-  * (every legitimate pre-upgrade day marker is ≤ it by definition), so
-  * ingest days AFTER the migration are never shadowed, however far the
-  * legacy stream counter ran. The `mb` namespace keeps claiming all bare
-  * ids: the stream's checkpoint resumes its counter past its own legacy
-  * range, so the only residual collision is the stream counter GROWING
-  * INTO a sparse pre-upgrade day id (~one bare marker per pre-upgrade
-  * ingest day) — bounded, non-systematic, and surfaced as an
-  * already-applied no-op; no NEW bare markers accumulate post-upgrade.
-  * Deploy both producers' binaries together: an old binary writing bare
-  * markers after the sentinel exists would re-widen the ambiguity.
-  *
-  * == The sentinel's own lifecycle (hardened r15) ==
-  * Producers pin the bound EAGERLY via [[ensureMigrationBound]] on every
-  * entry (applyBatch/growBatch/appendBatch), not just inside the day
-  * gate: if day grows pause between the upgrade and the first day-gate
-  * consult, ingest days in that gap whose ids collide with the legacy
-  * bare range would otherwise still be shadowed — the continuously
-  * running producer (usually the stream) pins the bound at deploy
-  * instead. The write is create-exclusive with read-after-lose, so two
-  * first-touch producers racing across a UTC midnight end with ONE bound
-  * (the first write sticks; the loser reads it). A torn sentinel (crash
-  * between create and write — empty or unparseable) is treated as ABSENT
-  * and rewritten: recomputation is safe because the bare-marker set is
-  * immutable post-upgrade, so the recomputed bound differs from the lost
-  * one only if the heal crosses a day boundary, within the rule's slack.
-  * The bound is immutable once committed, so each JVM caches it per
-  * batches dir — the bare-fallback path costs no filesystem read after
-  * first touch.
+  * A batch is marked by `_batches/<namespace>-<id>`: `mb-<id>` for a live
+  * stream's micro-batch counter, `day-<id>` for the DAG's epoch days. Ids
+  * only need to be unique within their producer. A bare `_batches/<id>`
+  * (the spelling from before markers were namespaced) is refused wherever
+  * `_batches` is read here: it cannot say which producer applied it, and
+  * a wrong guess either re-applies the batch or drops one. The error
+  * names the file and the rename that fixes it.
   */
 object Markers {
 
-  private[graft] val MigrationSentinel = "_migration"
-
-  /** JVM cache of the committed migration bound per QUALIFIED batches
-    * dir (the sentinel is write-once, so a cached value can never go
-    * stale), plus per-dir monitors so same-JVM first-touch racers
-    * serialize on the load instead of falling back to the cross-JVM
-    * create-exclusive path (the IndexConf discipline). Neither map is
-    * pruned: entries are tiny and index roots few. A test that deletes
-    * and recreates an index UNDER THE SAME PATH within one JVM sees the
-    * cached bound — semantically identical unless the recreation crosses
-    * UTC midnight, which is inside the rule's slack anyway.
-    */
-  private val bounds =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val boundLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** True iff `batchId` is applied under `namespace` — the namespaced
-    * marker, or a legacy bare marker admissible under the migration rule
-    * above. Existence-only: producers whose markers carry content (the
-    * Pq/Bm25 claimed-empty protocol) gate on [[appliedNonEmpty]].
+  /** True iff `batchId` is applied under `namespace`. Existence-only:
+    * producers whose markers carry content (the [[claimBatch]]
+    * claimed-empty protocol) gate on [[appliedNonEmpty]].
     */
   def applied(
       spark: SparkSession, indexDir: String, batchId: Long,
@@ -92,129 +32,50 @@ object Markers {
   }
 
   /** True iff `batchId` is applied WITH CONTENT under `namespace` — the
-    * non-empty-marker gate of the `Pq.appendBatch`/`Bm25.appendBatch`
-    * protocol, where an EMPTY marker is a claimed-but-dead attempt that
-    * must read as not-applied. Legacy bare markers count under the same
-    * admission rule as [[applied]].
+    * gate of the [[claimBatch]] protocol, where an EMPTY marker is a
+    * claimed-but-dead attempt that must read as not-applied.
     */
   def appliedNonEmpty(
       spark: SparkSession, indexDir: String, batchId: Long,
-      namespace: String): Boolean = {
-    val fs = fsOf(spark, indexDir)
+      namespace: String): Boolean =
+    nonEmptyMarker(fsOf(spark, indexDir), indexDir, batchId, namespace)
+
+  private def nonEmptyMarker(
+      fs: FileSystem, indexDir: String, batchId: Long,
+      namespace: String): Boolean =
     existingMarker(fs, indexDir, batchId, namespace).exists { p =>
-      // a concurrent replayer healing a claimed-but-dead marker deletes
-      // it between our existence check and this stat (r15 ADVICE — the
-      // same TOCTOU the Pq/Bm25 replayBatch inspection absorbs): a
-      // vanished marker reads as NOT-applied; the healer owns the retry
+      // a concurrent mutator healing a dead claim deletes it between the
+      // existence check and this stat: a vanished marker reads as
+      // NOT-applied; the healer's producer owns the retry
       try fs.getFileStatus(p).getLen > 0
       catch { case _: java.io.FileNotFoundException => false }
     }
-  }
 
-  /** The marker file that currently REPRESENTS (`batchId`, `namespace`),
-    * if any: the namespaced marker when present, else an admissible
-    * legacy bare one. Protocol code that must inspect or heal the
-    * claimed state (the Pq/Bm25 empty-marker retry) resolves through
-    * this so the legacy and namespaced spellings share one rule.
+  /** The marker of (`batchId`, `namespace`), if present. A bare
+    * `_batches/<batchId>` beside an absent namespaced one is refused.
     */
   private[graft] def existingMarker(
       fs: FileSystem, indexDir: String, batchId: Long,
       namespace: String): Option[Path] = {
-    val ns = new Path(s"$indexDir/_batches/$namespace-$batchId")
+    val ns = markerPath(indexDir, batchId, namespace)
     if (fs.exists(ns)) return Some(ns)
-    val bare = new Path(s"$indexDir/_batches/$batchId")
-    if (fs.exists(bare) && (namespace != "day" ||
-        batchId <= readBound(fs, bare.getParent))) Some(bare)
-    else None
+    val bare = new Path(ns.getParent, batchId.toString)
+    if (fs.exists(bare)) refuseBare(bare)
+    None
   }
 
-  /** The bound for READ paths — never writes. Gates (`applied`,
-    * `appliedNonEmpty`, DAG monitors) may run with read-only credentials
-    * against a pre-upgrade index before any producer has pinned the
-    * sentinel; the old route through [[legacyBound]] made a pure
-    * existence check mkdir + create (self-review r15). An absent
-    * sentinel reads as TODAY — exactly the bound the first producer
-    * touch would pin, so the admission decision matches; if the producer
-    * pins tomorrow instead, the divergence is the same ≤ one-day slack
-    * as racing first-touch writers (class doc). THE SLACK CLAIM ASSUMES
-    * A PRODUCER PINS WITHIN A DAY OF THE FIRST GATE CONSULT (r15
-    * ADVICE): a monitor-only deployment — read-only gates running for K
-    * days before any producer's first run — answers from the drifting
-    * consult-day fallback each day, admitting legacy bare ids up to
-    * each CONSULT day rather than the deploy day the producer will
-    * eventually pin, i.e. up to K days wider. Each fallback answer logs
-    * a warning so a long-unpinned index is visible before the producer
-    * lands; deploy at least one producer alongside any monitor to pin
-    * the bound at deploy time. The un-pinned value is
-    * NOT cached (the producer's later commit must win); a persistent
-    * read ERROR on an existing sentinel fails loudly rather than
-    * guessing wide.
-    */
-  private def readBound(fs: FileSystem, batchesDir: Path): Long = {
-    val key = fs.makeQualified(batchesDir).toString
-    val cached = bounds.get(key)
-    if (cached != null) return cached.longValue()
-    val p = new Path(batchesDir, MigrationSentinel)
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      if (!fs.exists(p)) {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"Markers: no migration sentinel at $p — answering a read-only " +
-            "gate from TODAY's epoch day. The bound drifts until a " +
-            "producer pins it (ensureMigrationBound); an index monitored " +
-            "long before its first producer deploy widens bare-id " +
-            "admission by a day per un-pinned day")
-        return java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay
-      }
-      val read: Option[String] =
-        try {
-          val in = fs.open(p)
-          try Some(new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8))
-          finally in.close()
-        } catch { case _: java.io.IOException => None } // racer/transient
-      read.flatMap(_.trim.toLongOption) match {
-        case Some(b) => bounds.put(key, b); return b
-        case None if read.isDefined =>
-          // torn legacy content: the WRITE path heals it; a reader just
-          // uses the same today-fallback the heal would recompute
-          return java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay
-        case None => Thread.sleep(50) // read error: brief retry
-      }
-    }
+  private def isBare(name: String): Boolean =
+    name.nonEmpty && name.forall(_.isDigit)
+
+  private def refuseBare(p: Path): Nothing = {
+    val id = p.getName
     throw new IllegalStateException(
-      s"Markers: migration sentinel at $batchesDir/$MigrationSentinel " +
-        "exists but cannot be read after 5 attempts")
+      s"Markers: $p is a bare batch marker, a spelling from before markers " +
+        s"were namespaced by producer; it cannot say which producer applied " +
+        s"batch $id, so the batch is neither re-applied nor rebuilt over. " +
+        s"Rename it (and its .pre, if any) to day-$id if the DAG applied " +
+        s"epoch day $id, or to mb-$id if a stream applied micro-batch $id")
   }
-
-  /** Loud visibility for the migration rule's one residual collision
-    * (r16 ADVICE, low): the `mb` namespace claims EVERY legacy bare id,
-    * so a long-running stream whose checkpoint counter grows into a
-    * pre-upgrade bare day id silently no-ops that micro-batch — the
-    * apply path returns -1, indistinguishable from the stream's own
-    * replay, and the batch's rows are never indexed. The collision is
-    * bounded (~one bare marker per pre-upgrade ingest day) and
-    * non-systematic (class doc), but it is a DATA DROP, not a replay —
-    * so when a non-`day` producer's applied-replay no-op resolves to a
-    * BARE marker rather than its own `<ns>-<id>` spelling, the apply
-    * paths call this to log it loudly instead of reading as a normal
-    * replay. The operator's remedies: bump the stream counter past the
-    * legacy range (a fresh checkpoint dir), or re-feed the dropped
-    * batch's rows under a fresh id.
-    */
-  private[graft] def warnIfBareClaim(
-      m: Path, namespace: String, batchId: Long): Boolean =
-    if (namespace != "day" && m.getName == batchId.toString) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"Markers: batch $namespace-$batchId resolved to LEGACY BARE " +
-          s"marker $m — this batch no-ops as already-applied under the " +
-          "migration rule, but for a live stream this is a pre-upgrade " +
-          "day id colliding with the stream counter: the batch's rows " +
-          "were NOT indexed (a one-batch data drop, not a replay). " +
-          "Re-feed them under a fresh id if this index never saw them.")
-      true
-    } else false
 
   /** Sorted `relativePath:length` lines of every DATA file under an index
     * root ("_"/"."-prefixed names — sidecars, markers, _SUCCESS — skipped
@@ -316,8 +177,8 @@ object Markers {
     *    and its `.pre` so the producer's retry re-applies (rows absent
     *    or you removed the partial), or write the applied row count
     *    into the marker (rows fully present).
-    *  - `red_no_proof` — empty claim with no readable `.pre` (a legacy
-    *    or hand-made claim): no machine evidence either way. Same
+    *  - `red_no_proof` — empty claim with no readable `.pre` (a
+    *    hand-made claim): no machine evidence either way. Same
     *    runbook as `red_landed`, minus the manifest hints.
     *  - `orphan_proof` — a `.pre` without its marker (debris from a
     *    crash inside the heal's two deletes): safe to delete.
@@ -347,8 +208,7 @@ object Markers {
         } catch { case _: java.io.IOException => None }
       def split(name: String): (String, Long) = {
         val i = name.indexOf('-')
-        if (i < 0) ("", name.toLong)
-        else (name.substring(0, i), name.substring(i + 1).toLong)
+        (name.substring(0, i), name.substring(i + 1).toLong)
       }
       markers.foreach { st =>
         val name = st.getPath.getName
@@ -377,8 +237,8 @@ object Markers {
                   s"; removed e.g. ${removed.take(3).mkString(", ")}" else "")))
           case None =>
             out += ((name, ns, id, "red_no_proof", -1L,
-              "empty claim with no readable .pre proof (legacy or " +
-                "hand-made) — operator adjudicates"))
+              "empty claim with no readable .pre proof (hand-made) — " +
+                "operator adjudicates"))
         }
       }
       entries.filter(_.getPath.getName.endsWith(".pre")).foreach { st =>
@@ -397,146 +257,99 @@ object Markers {
       .toDF("marker", "namespace", "batch_id", "state", "rows", "evidence")
   }
 
-  /** Sentinel the appendBatch paths return when the replay no-op
-    * resolved to a LEGACY BARE marker the producer did not write (the
-    * [[warnIfBareClaim]] condition): the batch's rows were NOT indexed —
-    * a one-batch data drop, not a replay — and a monitoring hook on the
-    * grow legs' `onBatch` must be able to tell the two apart
-    * PROGRAMMATICALLY, not by scraping logs (r17 verdict #2: both used
-    * to return -1). Genuine replays and unrepairable claims keep -1.
-    */
-  val BareClaimDrop: Long = -2L
-
-  /** The path a NEW claim for (`batchId`, `namespace`) is written at —
-    * always namespaced; legacy bare spellings are read-only history.
-    */
+  /** The path of the marker for (`batchId`, `namespace`). */
   private[graft] def markerPath(
       indexDir: String, batchId: Long, namespace: String): Path =
     new Path(s"$indexDir/_batches/$namespace-$batchId")
 
-  /** True for file names that are batch markers (bare `<digits>` or
-    * namespaced `<letters>-<digits>`), false for sidecars (`.pre`,
-    * `_migration`, `_SUCCESS`, …) — the build-vs-append decision's "has
-    * any batch ever applied here" listing filter.
+  /** True for batch-marker file names (`<letters>-<digits>`), false for
+    * sidecars (`.pre`, `_SUCCESS`, …).
     */
   private[graft] def isBatchMarker(name: String): Boolean = {
     val i = name.indexOf('-')
-    val digits = if (i < 0) name else name.substring(i + 1)
-    digits.nonEmpty && digits.forall(_.isDigit) &&
-      (i != 0) && (i < 0 || name.substring(0, i).forall(_.isLetter))
+    val digits = name.substring(i + 1)
+    i > 0 && name.substring(0, i).forall(_.isLetter) &&
+      digits.nonEmpty && digits.forall(_.isDigit)
   }
 
-  /** Pin the migration bound NOW if this index still lacks one — called
-    * from every producer entry so the bound records deploy time, not the
-    * first day-gate consult (see the class doc). Idempotent; after the
-    * first call per JVM it is one cache lookup.
+  /** Has any batch ever applied here? The build-vs-append decision of
+    * [[claimBatch]]; a bare marker anywhere in `_batches` is refused.
     */
-  def ensureMigrationBound(spark: SparkSession, indexDir: String): Unit = {
-    val batches = new Path(s"$indexDir/_batches")
-    legacyBound(batches.getFileSystem(spark.sessionState.newHadoopConf()),
-      batches)
+  private def anyApplied(fs: FileSystem, indexDir: String): Boolean = {
+    val bdir = new Path(s"$indexDir/_batches")
+    if (!fs.exists(bdir)) return false
+    val entries = fs.listStatus(bdir).toSeq.map(_.getPath)
+    entries.find(p => isBare(p.getName)).foreach(refuseBare)
+    entries.exists(p => isBatchMarker(p.getName))
+  }
+
+  /** The exactly-once batch protocol of the grown indexes
+    * (`Pq.appendBatch`, `Bm25.appendBatch` and their stream legs). The
+    * caller supplies what differs per index: the sidecar that means
+    * "built" (`built`, relative to `indexDir`), the lease label, a
+    * pre-step `heal`, the `build` body, and the `validate`-then-`append`
+    * body. The steps:
+    *  1. a non-empty marker is immutable, so a replay returns -1 before
+    *     the lease and never queues behind a live mutator;
+    *  2. everything else runs under the artifact's cross-JVM MUTATION
+    *     lease: two producers (the DAG and a live stream) may share one
+    *     index, and two day-one builds, or an append racing a rebuild or
+    *     a read-modify-write of the index's stats, would corrupt it;
+    *  3. `heal`, then [[healDeadClaims]], which deletes every empty
+    *     claim whose `.pre` manifest proves nothing landed. A marker
+    *     still present after that is applied or an unrepairable claim:
+    *     -1, and its gate stays red for the operator ([[inspect]]);
+    *  4. build vs append is decided by whether ANY batch marker exists,
+    *     not by the `built` sidecar alone: `build` is an idempotent
+    *     overwrite, so a day-one crash between the build and its marker
+    *     rebuilds on replay instead of appending day one twice. Its
+    *     marker is written with the row count `build` returns;
+    *  5. append: `validate` first (a layout mismatch fails before
+    *     `_batches` is touched), then the `.pre` data-file manifest, the
+    *     EMPTY claim, `append`, the marker filled with its row count,
+    *     and the `.pre` dropped. A crash after the claim leaves an empty
+    *     marker that step 3 heals on the next mutation when the manifest
+    *     proves nothing landed.
+    * Returns rows applied; -1 for a replay / unrepairable claim.
+    */
+  private[graft] def claimBatch[I](
+      spark: SparkSession, indexDir: String, batchId: Long,
+      namespace: String, built: String, what: String,
+      leaseMs: Long, leaseMaxWaitMs: Long, heal: () => Unit = () => ())(
+      build: () => Long, validate: () => I, append: I => Long): Long = {
+    val fs = fsOf(spark, indexDir)
+    if (nonEmptyMarker(fs, indexDir, batchId, namespace)) return -1L
+    val marker = markerPath(indexDir, batchId, namespace)
+    val pre = new Path(marker.getParent, marker.getName + ".pre")
+    def write(p: Path, text: String): Unit = {
+      val out = fs.create(p, true)
+      try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+    graft.sources.BuildLock.withLease(spark, indexDir, what,
+      leaseMs = leaseMs, maxWaitMs = leaseMaxWaitMs, mutation = true) {
+      heal()
+      healDeadClaims(fs, indexDir)
+      if (existingMarker(fs, indexDir, batchId, namespace).isDefined) -1L
+      else if (!anyApplied(fs, indexDir) ||
+          !fs.exists(new Path(indexDir, built))) {
+        val n = build() // overwrites the root: `_batches` is made after
+        fs.mkdirs(marker.getParent)
+        write(marker, n.toString)
+        n
+      } else {
+        val index = validate()
+        fs.mkdirs(marker.getParent)
+        write(pre, dataFileManifest(fs, indexDir))
+        write(marker, "") // the claim: empty = not yet applied
+        val n = append(index)
+        write(marker, n.toString)
+        fs.delete(pre, false)
+        n
+      }
+    }
   }
 
   private def fsOf(spark: SparkSession, indexDir: String): FileSystem =
     new Path(indexDir).getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** The epoch day recorded at migration — the upper bound on bare ids
-    * the `day` namespace honors. Cached per batches dir after first
-    * load; first-touch writes it create-exclusively (see class doc).
-    */
-  private def legacyBound(fs: FileSystem, batchesDir: Path): Long = {
-    val key = fs.makeQualified(batchesDir).toString
-    val cached = bounds.get(key)
-    if (cached != null) return cached.longValue()
-    boundLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val c = bounds.get(key)
-      if (c != null) return c.longValue()
-      val b = loadOrWriteBound(fs, batchesDir)
-      bounds.put(key, b)
-      b
-    }
-  }
-
-  /** Read the committed bound, or commit TODAY's epoch day if absent.
-    * The commit is write-temp-then-RENAME, so no reader can ever observe
-    * a half-written sentinel — the pre-fix create-then-write protocol
-    * left an empty-file window that a racing first-touch could read,
-    * "heal" by deletion, and livelock against (each racer deleting the
-    * others' mid-write files). An EXISTING sentinel whose content READS
-    * COMPLETELY but doesn't parse (torn by a pre-upgrade crash between
-    * create and write) is treated as absent and rewritten — recomputation
-    * is safe, see the class doc. A read that ERRORS (transient store
-    * failure, racer mid-commit, corrupt checksum) only retries and, if
-    * persistent, fails loudly — deleting on a read error would destroy a
-    * valid bound over a hiccup and rewrite it with TODAY, widening the
-    * bare-claim window.
-    *
-    * Racer convergence: on HDFS/object stores rename does not replace an
-    * existing destination, so the FIRST commit sticks and losers read it
-    * back. On the local filesystem a rename may replace — the file still
-    * always holds exactly ONE complete bound, and two racers' bounds can
-    * differ only when their first touches straddle UTC midnight, leaving
-    * at most one day of slack in the bare-claim window (each writes the
-    * epoch day of its own instant).
-    */
-  private def loadOrWriteBound(fs: FileSystem, batchesDir: Path): Long = {
-    val p = new Path(batchesDir, MigrationSentinel)
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      if (fs.exists(p)) {
-        // a read that FAILED (racer's commit mid-flight, transient store
-        // error) must only RETRY — deleting on it would destroy a valid
-        // sentinel over a hiccup and rewrite it with TODAY, silently
-        // widening the bare-claim window (the exact shadowing class the
-        // sentinel kills). Only content that was READ COMPLETELY but
-        // doesn't parse (the legacy torn-create state) is recomputed.
-        val read: Option[String] =
-          try {
-            val in = fs.open(p)
-            try Some(new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8))
-            finally in.close()
-          } catch { case _: java.io.IOException => None }
-        read match {
-          case Some(text) => text.trim.toLongOption match {
-            case Some(b) => return b
-            case None =>
-              // legacy torn sentinel: recompute (safe, see class doc). A
-              // racer may delete concurrently — either way the loop
-              // re-commits or reads the other's commit.
-              try fs.delete(p, false)
-              catch { case _: java.io.IOException => () }
-          }
-          case None => () // read failure: loop retries, never deletes
-        }
-      } else {
-        fs.mkdirs(batchesDir)
-        val bound = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay
-        val tmp = new Path(batchesDir,
-          s"$MigrationSentinel.tmp.${java.util.UUID.randomUUID().toString}")
-        val out = fs.create(tmp, true)
-        try out.write(bound.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        if (!fs.rename(tmp, p)) fs.delete(tmp, false) // a racer committed
-        // first: drop ours, loop reads theirs (the read-after-lose rule)
-      }
-    }
-    throw new IllegalStateException(
-      s"Markers: could not read or write the migration sentinel at " +
-        s"$batchesDir/$MigrationSentinel after $attempts attempts — " +
-        "racing writers are expected to converge within a few rounds")
-  }
-
-  /** TEST-ONLY seams: [[loadOrWriteBound]] bypassing the JVM cache and
-    * per-dir monitor (simulates racing first-touch producers in SEPARATE
-    * JVMs, which the same-JVM monitor would otherwise serialize), and a
-    * cache drop (simulates a fresh JVM against an existing sentinel).
-    */
-  private[graft] def loadOrWriteBoundForTest(
-      fs: FileSystem, batchesDir: Path): Long = loadOrWriteBound(fs, batchesDir)
-  private[graft] def dropCachedBoundForTest(
-      fs: FileSystem, batchesDir: Path): Unit =
-    bounds.remove(fs.makeQualified(batchesDir).toString)
 }

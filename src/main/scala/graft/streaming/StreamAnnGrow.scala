@@ -11,8 +11,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * ([[StreamNearDup]] for text near-dup, [[StreamFingerprint]] for
   * media); the ANN and BM25 indexes were the asymmetry — and the r15
   * marker namespacing ([[Markers]]: `mb-<id>` for stream micro-batches,
-  * `day-<id>` for DAG epoch days, legacy bare ids under the migration
-  * rule) existed precisely so this second producer is safe to land.
+  * `day-<id>` for DAG epoch days) existed precisely so this second
+  * producer is safe to land.
   *
   * The batch protocol is [[Pq.appendBatch]] VERBATIM, namespace `"mb"` —
   * one implementation, not a streaming re-derivation, so the stream and
@@ -31,10 +31,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     instead of writing old-model codes into the new-model index and
   *     losing its marker in the swap's snapshot;
   *   - layout rides [[graft.sources.IndexConf]] (stamp-or-validate on
-  *     (nlist, m, k)), heals ride `healStagedRebuild`, and
-  *     [[Markers.ensureMigrationBound]] pins the legacy-marker bound at
-  *     every producer entry (the continuously-running stream pins it at
-  *     deploy even when the day leg is paused — the r15 hardening).
+  *     (nlist, m, k)), and heals ride `healStagedRebuild`.
   *
   * Freezing semantics: appends quantize under the index's FROZEN coarse
   * centroids + codebooks (the [[Pq.appendToIndex]] contract), so a
@@ -80,10 +77,7 @@ object StreamAnnGrow {
     * a float-array vector column) appends into the IVF-PQ index at
     * `indexDir` under the `mb` marker namespace. `onBatch(batchId, n)`
     * observes the applied row count — the monitoring hook, mirroring
-    * [[StreamFingerprint.start]]: -1 for a replay, and
-    * [[graft.streaming.Markers.BareClaimDrop]] (-2) for the legacy
-    * bare-marker collision, which is a one-batch DATA DROP the hook
-    * should alert on, never read as a replay (r17 verdict #2).
+    * [[StreamFingerprint.start]]: -1 for a replay / unrepairable claim.
     */
   def start(
       emb: DataFrame, idCol: String, vecCol: String,
@@ -104,8 +98,7 @@ object StreamAnnGrow {
   /** One micro-batch of the protocol (factored out so the semantics are
     * unit-testable without a streaming runtime, like every other stream
     * leg's applyBatch/growBatch). Returns rows applied; -1 for a
-    * replay / unrepairable claim; [[graft.streaming.Markers.BareClaimDrop]]
-    * (-2) for the legacy bare-marker data drop.
+    * replay / unrepairable claim.
     */
   def growBatch(
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,

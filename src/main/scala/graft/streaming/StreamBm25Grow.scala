@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the feed grow the SAME persisted q82b posting index the nightly DAG
   * grows. The batch protocol is [[Bm25.appendBatch]] VERBATIM under the
   * `mb` marker namespace ([[Markers]] owns the producer namespacing and
-  * the legacy bare-id migration rule):
+  * the claim protocol):
   *   - applied marker → replay no-op; claim-empty → append → commit
   *     with count, `.pre`-manifest self-heal for crashed retries;
   *   - EVERY mutation runs under the cross-JVM build lease: the day-one
@@ -47,9 +47,7 @@ object StreamBm25Grow {
     * (doc_id, text, lang rows — the [[Bm25.postingRows]] input shape)
     * appends into the posting index at `indexDir` under the `mb`
     * namespace. `onBatch(batchId, n)` observes docs applied: -1 for a
-    * replay, [[graft.streaming.Markers.BareClaimDrop]] (-2) for the
-    * legacy bare-marker collision — a one-batch DATA DROP the hook
-    * should alert on, never read as a replay (r17 verdict #2).
+    * replay / unrepairable claim.
     */
   def start(
       docs: DataFrame, indexDir: String, checkpointDir: String,
@@ -68,8 +66,7 @@ object StreamBm25Grow {
 
   /** One micro-batch of the protocol (unit-testable without a streaming
     * runtime). Returns docs applied; -1 for a replay / unrepairable
-    * claim; [[graft.streaming.Markers.BareClaimDrop]] (-2) for the
-    * legacy bare-marker data drop.
+    * claim.
     */
   def growBatch(
       spark: org.apache.spark.sql.SparkSession, batch: DataFrame,

@@ -27,14 +27,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * namespaced PER PRODUCER (r12 ADVICE: sharing one numeric namespace
   * relied on micro-batch counters never reaching the ~18k epoch-day
   * range; a long-lived stream crossing it would silently no-op a
-  * nightly grow). MIGRATION (r13 ADVICE): a pre-upgrade index carries
-  * bare `_batches/<id>` markers — [[Markers]] owns the admission rule
-  * (shared with StreamNearDup): previously-completed days still no-op
-  * their grow and replayed micro-batches still skip, but the `day`
-  * namespace only honors bare ids up to the epoch day recorded at
-  * migration, so a legacy stream's contiguous counter range can never
-  * shadow future grows. Survivors (full input rows) land in
-  * `survivorsDir/batch=<id>/`, overwritten per batch id.
+  * nightly grow). A bare `_batches/<id>` from before the namespacing is
+  * refused loudly ([[Markers]], shared with StreamNearDup). Survivors
+  * (full input rows) land in `survivorsDir/batch=<id>/`, overwritten per
+  * batch id.
   *
   * Delivery semantics — [[StreamNearDup]]'s write order, verbatim:
   *   1. marker exists → the batch is fully applied: skip (checkpoint
@@ -82,10 +78,9 @@ object StreamFingerprint {
       .start()
 
   /** True iff `batchId` is already applied under `namespace` ("mb" or
-    * "day") — namespaced marker OR an admissible legacy bare marker
-    * ([[Markers]] owns the migration rule, see the class doc). Shared by
-    * [[applyBatch]], [[growBatch]] and the LlmIngestDag gate so gate and
-    * apply can never disagree on what "applied" means.
+    * "day"; [[Markers]] owns the rule). Shared by [[applyBatch]],
+    * [[growBatch]] and the LlmIngestDag gate so gate and apply can never
+    * disagree on what "applied" means.
     */
   def batchApplied(
       spark: SparkSession, indexDir: String, batchId: Long,
@@ -111,12 +106,8 @@ object StreamFingerprint {
     // both producers must ship the same decode, as with any model).
     graft.sources.IndexConf.ensure(spark, indexDir,
       Map("maxHamming" -> maxHamming.toString), "media fingerprint index")
-    // pin the legacy-marker migration bound at PRODUCER entry (Markers
-    // class doc, r14 ADVICE): the continuously-running stream pins it at
-    // deploy even when the day leg is paused
-    Markers.ensureMigrationBound(spark, indexDir)
     val conf = spark.sessionState.newHadoopConf()
-    val marker = new Path(s"$indexDir/_batches/mb-$batchId")
+    val marker = Markers.markerPath(indexDir, batchId, "mb")
     val fs = marker.getFileSystem(conf)
     if (batchApplied(spark, indexDir, batchId, "mb")) return -1L
 
@@ -194,9 +185,8 @@ object StreamFingerprint {
     // keys/ artifact, so both must agree on the blocking radius
     graft.sources.IndexConf.ensure(spark, indexDir,
       Map("maxHamming" -> maxHamming.toString), "media fingerprint index")
-    Markers.ensureMigrationBound(spark, indexDir)
     val conf = spark.sessionState.newHadoopConf()
-    val marker = new Path(s"$indexDir/_batches/day-$batchId")
+    val marker = Markers.markerPath(indexDir, batchId, "day")
     val fs = marker.getFileSystem(conf)
     if (batchApplied(spark, indexDir, batchId, "day")) return -1L
     val banded = Multimodal.bandKeys56(

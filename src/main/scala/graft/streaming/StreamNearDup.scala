@@ -22,16 +22,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * namespaced PER PRODUCER (r13 verdict #1, the StreamFingerprint r13
   * pattern: sharing one numeric namespace relied on micro-batch counters
   * never reaching the ~18k epoch-day range; a long-lived stream crossing
-  * it would silently no-op a day's ingest). MIGRATION: a pre-upgrade index
-  * carries bare `_batches/<id>` markers from both producers; [[Markers]]
-  * owns the admission rule (shared with StreamFingerprint) — a bare id
-  * stays honored so a deployed index never re-applies its history
-  * (re-running a day would self-hit every doc against its own index keys
-  * and empty the survivor set), but the `day` namespace only honors bare
-  * ids up to the epoch day recorded at migration: a legacy stream whose
-  * counter ran past today's epoch day has a CONTIGUOUS bare range that
-  * would otherwise shadow every future ingest day, which is systematic,
-  * not a one-in-18k accident.
+  * it would silently no-op a day's ingest). A bare `_batches/<id>` from
+  * before the namespacing is refused loudly ([[Markers]], shared with
+  * StreamFingerprint): re-running an applied day would self-hit every
+  * doc against its own index keys and empty the survivor set.
   * Survivors land in `survivorsDir/batch=<id>/` (full rows), overwritten
   * per batch id — survivor dirs stay bare-numeric on purpose: the two
   * producers' id RANGES are what collide in the marker namespace, but a
@@ -77,11 +71,10 @@ object StreamNearDup {
   val StreamNamespace = "mb"
   val DayNamespace = "day"
 
-  /** True iff `batchId` is already applied under `namespace` — namespaced
-    * marker OR an admissible legacy bare marker ([[Markers]] owns the
-    * migration rule, shared with [[StreamFingerprint]] so the two
-    * indexes' "applied" semantics cannot drift). The LlmIngestDag gate
-    * uses this so gate and apply can never disagree.
+  /** True iff `batchId` is already applied under `namespace` ([[Markers]]
+    * owns the rule, shared with [[StreamFingerprint]] so the two indexes'
+    * "applied" semantics cannot drift). The LlmIngestDag gate uses this
+    * so gate and apply can never disagree.
     */
   def batchApplied(
       spark: SparkSession, indexDir: String, batchId: Long,
@@ -110,12 +103,8 @@ object StreamNearDup {
     graft.sources.IndexConf.ensure(spark, indexDir,
       Map("n" -> n.toString, "bands" -> "32", "rowsPerBand" -> "4"),
       "near-dup band/shingle index")
-    // pin the legacy-marker migration bound at PRODUCER entry, not at the
-    // first day-gate consult — a paused day leg must not widen the bare
-    // range the `day` namespace honors (Markers class doc, r14 ADVICE)
-    Markers.ensureMigrationBound(spark, indexDir)
     val conf = spark.sessionState.newHadoopConf()
-    val marker = new Path(s"$indexDir/_batches/$namespace-$batchId")
+    val marker = Markers.markerPath(indexDir, batchId, namespace)
     val fs = marker.getFileSystem(conf)
     if (batchApplied(spark, indexDir, batchId, namespace)) return -1L
 

@@ -88,7 +88,7 @@ class Bm25Spec extends SparkTestBase {
 
     // a claimed-but-dead batch (empty marker) with NO manifest: no proof
     // nothing landed -> red for the operator, not a silent re-append
-    val b3 = new java.io.File(s"$dir/_batches/3")
+    val b3 = new java.io.File(s"$dir/_batches/day-3")
     b3.getParentFile.mkdirs(); b3.createNewFile()
     assert(Bm25.appendBatch(spark, day(0, 2), dir, batchId = 3L) == -1L)
     assert(!Bm25.appendBatchApplied(spark, dir, 3L))
@@ -96,50 +96,24 @@ class Bm25Spec extends SparkTestBase {
     val manifest = {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sessionState.newHadoopConf())
-      graft.operators.Pq.dataFileManifest(fs, dir)
+      graft.streaming.Markers.dataFileManifest(fs, dir)
     }
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/_batches/3.pre"),
+      java.nio.file.Paths.get(s"$dir/_batches/day-3.pre"),
       manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     assert(Bm25.appendBatch(spark, day(0, 2), dir, batchId = 3L) == 2L)
     assert(Bm25.appendBatchApplied(spark, dir, 3L))
     // a STALE manifest (data landed after the claim) must stay red
-    val b4pre = java.nio.file.Paths.get(s"$dir/_batches/4.pre")
+    val b4pre = java.nio.file.Paths.get(s"$dir/_batches/day-4.pre")
     java.nio.file.Files.write(b4pre,
       "not-the-current-manifest".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    new java.io.File(s"$dir/_batches/4").createNewFile()
+    new java.io.File(s"$dir/_batches/day-4").createNewFile()
     assert(Bm25.appendBatch(spark, day(2, 4), dir, batchId = 4L) == -1L)
     // mismatched bucket count on an append fails loudly, never mis-routes
     val err = intercept[IllegalArgumentException] {
       Bm25.appendBatch(spark, day(2, 4), dir, batchId = 9L, buckets = 17)
     }
     assert(err.getMessage.contains("buckets"))
-  }
-
-  test("legacy bare markers: a pre-migration applied day replays as a no-op; new claims are day-namespaced; future-day bare ids are not honored") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_legacy").toString + "/idx"
-    // a pre-upgrade index: day 1 applied under the OLD bare spelling —
-    // simulate by renaming the namespaced marker to bare (the
-    // CatchupSpec/StreamFingerprintSpec migration pattern)
-    assert(Bm25.appendBatch(spark, day(0, 4), dir, batchId = 1L) == 4L)
-    assert(new java.io.File(s"$dir/_batches/day-1")
-      .renameTo(new java.io.File(s"$dir/_batches/1")))
-    // the bare marker stays honored: the replay no-ops instead of
-    // double-appending postings (re-running an applied batch is the
-    // catastrophic case the migration rule exists to prevent)
-    assert(Bm25.appendBatchApplied(spark, dir, 1L))
-    assert(Bm25.appendBatch(spark, day(0, 4), dir, batchId = 1L) == -1L)
-    // a fresh batch claims under the NAMESPACED spelling only
-    assert(Bm25.appendBatch(spark, day(4, 8), dir, batchId = 2L) == 4L)
-    assert(new java.io.File(s"$dir/_batches/day-2").exists())
-    assert(!new java.io.File(s"$dir/_batches/2").exists())
-    // a bare marker for a FUTURE ingest day (a legacy stream counter that
-    // ran past today) does NOT shadow it in the day namespace
-    val future = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay + 40
-    val fut = new java.io.File(s"$dir/_batches/$future")
-    val out = new java.io.FileOutputStream(fut)
-    out.write("99".getBytes("UTF-8")); out.close()
-    assert(!Bm25.appendBatchApplied(spark, dir, future))
   }
 
   test("pb-partition compaction: 10 appends fold to a bounded file count, probes unchanged") {

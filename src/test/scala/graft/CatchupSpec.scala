@@ -119,25 +119,5 @@ class CatchupSpec extends SparkTestBase {
     assert(out.forall(_._2), out.mkString("; "))
     assert(applied == Vector((d1, 1L), (d2, 1L)),
       "both days must APPLY (n >= 0) despite the stream's colliding counter")
-
-    // legacy migration through catchup: mark d2 as pre-upgrade (bare
-    // marker), lose the watermark — the replayed day claims, not re-runs
-    assert(new java.io.File(s"$indexDir/_batches/day-${d2.toEpochDay}")
-      .renameTo(new java.io.File(s"$indexDir/_batches/${d2.toEpochDay}")))
-    def rmRf(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rmRf)); f.delete(); ()
-    }
-    rmRf(new java.io.File(s"$wm/date=$d2"))
-    applied = Vector.empty
-    val replay = Catchup.run(spark, wm, d1, d2.plusDays(1)) { d =>
-      val n = StreamNearDup.applyBatch(
-        spark, Seq((d.toEpochDay * 100L, dayText(d))).toDF("doc_id", "text"),
-        "doc_id", "text", indexDir, s"$root/day_out", batchId = d.toEpochDay,
-        namespace = StreamNearDup.DayNamespace)
-      applied :+= (d, n)
-      true
-    }
-    assert(replay.map(_._1) == Seq(d2) && applied == Vector((d2, -1L)),
-      s"a legacy-marked day must no-op on replay: $applied")
   }
 }

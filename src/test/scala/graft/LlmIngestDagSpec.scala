@@ -464,25 +464,5 @@ class LlmIngestDagSpec extends SparkTestBase {
       "the day must apply even when a stream counter shadows its epoch day")
     assert(new java.io.File(s"$indexDir/_batches/mb-${d1.toEpochDay}").exists())
     assert(new java.io.File(s"$indexDir/_batches/day-${d1.toEpochDay}").exists())
-
-    // MIGRATION: d2 was applied by THIS (post-upgrade) run under day-;
-    // simulate a pre-upgrade deployment by renaming its marker bare, then
-    // force a replay — the bare marker must claim the day (no re-apply:
-    // re-running would self-hit every doc against its own index keys)
-    val dayMarker = new java.io.File(s"$indexDir/_batches/day-${d2.toEpochDay}")
-    assert(dayMarker.renameTo(
-      new java.io.File(s"$indexDir/_batches/${d2.toEpochDay}")))
-    val shinglesBefore = spark.read.parquet(s"$indexDir/shingles").count()
-    def rmRf(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rmRf)); f.delete(); ()
-    }
-    rmRf(new java.io.File(s"$root/out/_catchup_watermark/date=$d2"))
-    val replay = LlmIngestDag.catchup(
-      spark, s"$root/in", s"$root/out", connect, d1, d2.plusDays(1), cfg)
-    assert(replay.map(_.date) == Seq(d2) && replay.head.ok,
-      replay.map(r => s"${r.date}: ${r.detail.mkString("; ")}").mkString("\n"))
-    assert(spark.read.parquet(s"$indexDir/shingles").count() == shinglesBefore,
-      "a legacy-marked day must not re-grow the index on replay")
-    assert(batchIds(d2) == (10L until 14L).toSet, "survivors untouched")
   }
 }

@@ -1,112 +1,70 @@
 package graft
 
-import graft.streaming.Markers
+import graft.streaming.{Markers, StreamNearDup}
 
 import java.nio.file.Files
 
 class MarkersSpec extends SparkTestBase {
+  import spark.implicits._
 
-  private def touch(dir: String, name: String): Unit = {
-    new java.io.File(s"$dir/_batches").mkdirs()
-    new java.io.File(s"$dir/_batches/$name").createNewFile()
-  }
-
-  test("legacy bare markers: days after the migration bound are never shadowed; mb keeps claiming") {
-    val dir = Files.createTempDirectory("markers").toString
-    val today = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay
-    // a pre-upgrade stream whose counter ran PAST today's epoch day left
-    // a contiguous bare range — simulate its edges plus a legitimate
-    // pre-upgrade day marker
-    touch(dir, "5")                      // old stream batch
-    touch(dir, (today - 10).toString)    // a day that really ran pre-upgrade
-    touch(dir, (today + 50).toString)    // stream counter in future-day range
-
-    // day namespace: bare ids ≤ the migration bound stay honored (a
-    // deployed index never re-applies its history)...
-    assert(Markers.applied(spark, dir, today - 10, "day"))
-    assert(Markers.applied(spark, dir, 5, "day"))
-    // ...but a FUTURE ingest day is not shadowed by the stream's range —
-    // the systematic pre-fix failure: every day until the counter's max
-    // silently no-op'd
-    assert(!Markers.applied(spark, dir, today + 50, "day"))
-    // mb namespace: all bare ids claimed (the stream's checkpoint resumes
-    // past its own range; residual day-id collisions are sparse)
-    assert(Markers.applied(spark, dir, today + 50, "mb"))
-    assert(Markers.applied(spark, dir, 5, "mb"))
-    // unmarked ids are unclaimed in both
-    assert(!Markers.applied(spark, dir, today + 51, "day"))
-    assert(!Markers.applied(spark, dir, today + 51, "mb"))
-
-    // gates are READ-ONLY (r15 self-review): the consults above wrote
-    // NOTHING — a monitoring gate with read-only credentials must work —
-    // they just answered under the same today-bound the first producer
-    // pin would commit. The PRODUCER pin persists it.
-    val sentinel = new java.io.File(s"$dir/_batches/_migration")
-    assert(!sentinel.exists())
-    Markers.ensureMigrationBound(spark, dir)
-    assert(sentinel.exists())
-    val recorded = new String(
-      java.nio.file.Files.readAllBytes(sentinel.toPath), "UTF-8").trim.toLong
-    assert(recorded == today)
-    // namespaced markers always win regardless of the bound
-    touch(dir, s"day-${today + 50}")
-    assert(Markers.applied(spark, dir, today + 50, "day"))
-  }
-
-  test("the bound is cached per JVM: the bare-fallback path pays no filesystem read after first touch") {
-    val dir = Files.createTempDirectory("markers_cache").toString
-    val today = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay
-    touch(dir, "7")
-    Markers.ensureMigrationBound(spark, dir) // producer pin: writes + caches
-    assert(Markers.applied(spark, dir, 7, "day"))
-    val sentinel = new java.io.File(s"$dir/_batches/_migration")
-    assert(sentinel.exists())
-    // delete the sentinel from under the JVM — a cached bound must keep
-    // answering identically without re-reading (the per-call-FS-read cost
-    // ADVICE flagged); the bound is write-once, so the cache can never go
-    // stale in a live system
-    assert(sentinel.delete())
-    assert(Markers.applied(spark, dir, 7, "day"))
-    assert(!Markers.applied(spark, dir, today + 9, "day"))
-  }
-
-  test("a torn sentinel (crash between create and write) heals: treated as absent and rewritten") {
-    val dir = Files.createTempDirectory("markers_torn").toString
-    val today = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay
-    touch(dir, "3")
-    touch(dir, Markers.MigrationSentinel) // 0-length file: the torn state
-    // pre-fix this threw NumberFormatException on ''.trim.toLong with no
-    // self-heal path, blocking every day-namespace gate until manual
-    // cleanup. A GATE now rides over the torn state read-only (same
-    // today-fallback the heal recomputes, no write)...
-    assert(Markers.applied(spark, dir, 3, "day"))
-    // ...and the PRODUCER pin is what heals the file itself
-    Markers.ensureMigrationBound(spark, dir)
-    val recorded = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/_batches/${Markers.MigrationSentinel}")),
-      "UTF-8").trim.toLong
-    assert(recorded == today)
-    // unparseable garbage heals the same way (fresh JVM view); written
-    // through the hadoop fs so the checksum sidecar stays consistent and
-    // the PARSE path (not the IO path) is what heals
+  /** Every `_batches` entry with its bytes, plus the index's data-file
+    * manifest: a call that changes neither wrote nothing to the index.
+    */
+  private def snapshot(dir: String): (String, Map[String, Seq[Byte]]) = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val bdir = new org.apache.hadoop.fs.Path(s"$dir/_batches")
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(bdir, Markers.MigrationSentinel), true)
-    out.write("not-a-number".getBytes("UTF-8")); out.close()
-    Markers.dropCachedBoundForTest(fs, bdir)
-    assert(Markers.applied(spark, dir, 3, "day"))
-    Markers.ensureMigrationBound(spark, dir)
-    val rehealed = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/_batches/${Markers.MigrationSentinel}")),
-      "UTF-8").trim.toLong
-    assert(rehealed == today)
+    val batches = new java.io.File(s"$dir/_batches").listFiles().toSeq
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    (Markers.dataFileManifest(fs, dir), batches)
+  }
+
+  test("a bare pre-namespace marker is refused loudly, never re-applied or rebuilt over") {
+    // IVF-PQ: day 1 built and applied, then its marker spelled bare
+    val dir = Files.createTempDirectory("markers_bare").toString + "/idx"
+    val emb = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
+    }.toDF("vec_id", "embedding")
+    assert(graft.operators.Pq.appendBatch(
+      spark, emb, "vec_id", "embedding", dir, 1L, nlist = 4, m = 4, k = 8) == 40L)
+    assert(new java.io.File(s"$dir/_batches/day-1")
+      .renameTo(new java.io.File(s"$dir/_batches/1")))
+    val before = snapshot(dir)
+    // batch 1 meets the bare marker in the per-id probe; batch 2 in the
+    // build-vs-append listing, where "no namespaced marker" would
+    // otherwise rebuild the index from batch 2 alone
+    for (batch <- Seq(1L, 2L)) {
+      val err = intercept[IllegalStateException] {
+        graft.operators.Pq.appendBatch(spark, emb, "vec_id", "embedding",
+          dir, batch, nlist = 4, m = 4, k = 8)
+      }
+      assert(err.getMessage.contains(s"$dir/_batches/1") &&
+        err.getMessage.contains("day-1"), err.getMessage)
+      assert(snapshot(dir) == before, s"batch $batch touched the index")
+    }
+
+    // near-dup: the same refusal through the shared per-id probe, for
+    // both producer namespaces
+    val ndDir = Files.createTempDirectory("markers_bare_nd").toString
+    val out = Files.createTempDirectory("markers_bare_nd_out").toString
+    val day = Seq((1L, "the quick brown fox jumps over the lazy dog today"))
+      .toDF("doc_id", "text")
+    assert(StreamNearDup.applyBatch(spark, day, "doc_id", "text", ndDir, out,
+      batchId = 1L, namespace = StreamNearDup.DayNamespace) == 1L)
+    assert(new java.io.File(s"$ndDir/_batches/day-1")
+      .renameTo(new java.io.File(s"$ndDir/_batches/1")))
+    val ndBefore = snapshot(ndDir)
+    for (ns <- Seq(StreamNearDup.DayNamespace, StreamNearDup.StreamNamespace)) {
+      val err = intercept[IllegalStateException] {
+        StreamNearDup.applyBatch(spark, day, "doc_id", "text", ndDir, out,
+          batchId = 1L, namespace = ns)
+      }
+      assert(err.getMessage.contains(s"$ndDir/_batches/1") &&
+        err.getMessage.contains("mb-1"), err.getMessage)
+      assert(snapshot(ndDir) == ndBefore, s"namespace $ns touched the index")
+    }
   }
 
   test("inspect classifies every claim state with its evidence, including the CONSTRUCTED data-landed-marker-unfilled red window (r18 verdict #2)") {
-    val sq = spark
-    import sq.implicits._
     val dir = Files.createTempDirectory("markers_inspect").toString + "/idx"
     val emb = (0 until 40).map { i =>
       (i.toLong, Array.tabulate(8)(d => ((i * 31 + d * 7) % 13 - 6).toFloat))
@@ -162,62 +120,5 @@ class MarkersSpec extends SparkTestBase {
     assert(!after.contains("day-7"), "dead_clean claim not healed")
     assert(after("day-8") == "red_landed" && after("day-9") == "red_no_proof",
       "a red claim must never be auto-healed")
-  }
-
-  test("racing first-touch producers (separate JVMs) converge on ONE bound; losers read the winner's") {
-    val dir = Files.createTempDirectory("markers_race").toString
-    new java.io.File(s"$dir/_batches").mkdirs()
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val bdir = new org.apache.hadoop.fs.Path(s"$dir/_batches")
-    // loadOrWriteBoundForTest bypasses the same-JVM monitor, so these 8
-    // threads hit the filesystem concurrently — the cross-JVM shape. The
-    // create-exclusive write means exactly one creation sticks; every
-    // loser must take the IOException → read-after-lose path and return
-    // the winner's bound, never throw and never fork a second bound.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      val futures = (1 to 8).map(_ => pool.submit(
-        new java.util.concurrent.Callable[Long] {
-          def call(): Long = Markers.loadOrWriteBoundForTest(fs, bdir)
-        }))
-      val bounds = futures.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(bounds.distinct.size == 1, s"racers forked bounds: $bounds")
-      val onDisk = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/_batches/${Markers.MigrationSentinel}")),
-        "UTF-8").trim.toLong
-      assert(onDisk == bounds.head)
-      // day claims are identical under the converged bound
-      touch(dir, "5")
-      assert(Markers.applied(spark, dir, 5, "day"))
-      assert(!Markers.applied(spark, dir, onDisk + 40, "day"))
-    } finally pool.shutdownNow()
-  }
-
-  test("ensureMigrationBound pins the bound at producer entry (deploy time), not at the first day-gate consult") {
-    val dir = Files.createTempDirectory("markers_eager").toString
-    val today = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay
-    // producer entry on an index that has legacy bare markers writes the
-    // sentinel immediately — a paused day leg can no longer widen the
-    // window in which a growing stream counter adds days to the bare range
-    touch(dir, "11")
-    Markers.ensureMigrationBound(spark, dir)
-    val sentinel = new java.io.File(s"$dir/_batches/_migration")
-    assert(sentinel.exists())
-    assert(new String(java.nio.file.Files.readAllBytes(sentinel.toPath),
-      "UTF-8").trim.toLong == today)
-    // idempotent, and a pre-existing bound is never overwritten (written
-    // through the hadoop fs so the checksum sidecar stays consistent)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val bdir = new org.apache.hadoop.fs.Path(s"$dir/_batches")
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(bdir, Markers.MigrationSentinel), true)
-    out.write("12345".getBytes("UTF-8")); out.close()
-    Markers.dropCachedBoundForTest(fs, bdir)
-    Markers.ensureMigrationBound(spark, dir)
-    assert(new String(java.nio.file.Files.readAllBytes(sentinel.toPath),
-      "UTF-8").trim == "12345")
-    assert(Markers.applied(spark, dir, 11, "day"))
   }
 }

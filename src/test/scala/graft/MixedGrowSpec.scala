@@ -83,12 +83,12 @@ class MixedGrowSpec extends SparkTestBase {
     // replays from EITHER producer no-op with the data dir untouched
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val before = Pq.dataFileManifest(fs, indexDir)
+    val before = graft.streaming.Markers.dataFileManifest(fs, indexDir)
     assert(Bm25.appendBatch(spark, docsDf(corpus.slice(3, 5)), indexDir, 1L,
       buckets = 8, namespace = "mb") == -1L)
     assert(Bm25.appendBatch(spark, docsDf(corpus.slice(5, 6)), indexDir, 1L,
       buckets = 8, namespace = "day") == -1L)
-    assert(Pq.dataFileManifest(fs, indexDir) == before)
+    assert(graft.streaming.Markers.dataFileManifest(fs, indexDir) == before)
   }
 
   test("IVF-PQ: interleaved mb-/day- appendBatch probes bit-identical to the same batches applied by a single producer (frozen-model contract)") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Knn, Pq}
+import graft.streaming.Markers
 import org.apache.spark.sql.functions._
 
 class PqSpec extends SparkTestBase {
@@ -282,8 +283,8 @@ class PqSpec extends SparkTestBase {
       out.write(content.getBytes("UTF-8"))
       out.close()
     }
-    put("2.pre", Pq.dataFileManifest(fs, dir))
-    put("2", "")
+    put("day-2.pre", Markers.dataFileManifest(fs, dir))
+    put("day-2", "")
     assert(!Pq.appendBatchApplied(spark, dir, 2L))
     // the retry (a Dag.Task retry calls appendBatch again) self-heals:
     // the r10 behavior was -1 + red-forever until a manual marker delete
@@ -297,14 +298,14 @@ class PqSpec extends SparkTestBase {
     // the narrow commit-vs-marker window: the manifest recorded at claim
     // time does NOT match the files on disk (the append landed, the
     // marker rewrite died) — must stay red for the operator, NOT re-append
-    put("3.pre", "stale-manifest-from-before-the-commit")
-    put("3", "")
+    put("day-3.pre", "stale-manifest-from-before-the-commit")
+    put("day-3", "")
     assert(Pq.appendBatch(spark, day2, "vec_id", "embedding", dir,
       batchId = 3L, nlist = 4, k = 8) == -1L)
     assert(!Pq.appendBatchApplied(spark, dir, 3L))
-    // a legacy/hand-made empty claim with NO manifest: no proof, stays red
-    val m3 = new java.io.File(s"$dir/_batches/3")
-    val p3 = new java.io.File(s"$dir/_batches/3.pre")
+    // a hand-made empty claim with NO manifest: no proof, stays red
+    val m3 = new java.io.File(s"$dir/_batches/day-3")
+    val p3 = new java.io.File(s"$dir/_batches/day-3.pre")
     assert(p3.delete())
     assert(Pq.appendBatch(spark, day2, "vec_id", "embedding", dir,
       batchId = 3L, nlist = 4, k = 8) == -1L)
@@ -336,7 +337,7 @@ class PqSpec extends SparkTestBase {
       out.close()
     }
     // the crashed claim: .pre manifest of the CURRENT files + empty marker
-    put("day-2.pre", Pq.dataFileManifest(fs, dir))
+    put("day-2.pre", Markers.dataFileManifest(fs, dir))
     put("day-2", "")
 
     // an intervening drift REBUILD (gate consulted, fires or not — the
@@ -356,7 +357,7 @@ class PqSpec extends SparkTestBase {
     assert(Pq.appendBatchApplied(spark, dir, 2L))
 
     // same class through COMPACTION's rewrite
-    put("day-3.pre", Pq.dataFileManifest(fs, dir))
+    put("day-3.pre", Markers.dataFileManifest(fs, dir))
     put("day-3", "")
     graft.sources.Compaction.compact(spark, dir, "cell",
       maxFiles = 1, smallFileBytes = Long.MaxValue / 4)
@@ -383,36 +384,6 @@ class PqSpec extends SparkTestBase {
     val ids = spark.read.parquet(dir).select("id").as[Long].collect()
     assert(ids.length == ids.distinct.length)
     assert(ids.toSet == clustered.select($"vec_id".cast("long")).as[Long].collect().toSet)
-  }
-
-  test("legacy bare markers: a pre-migration applied day replays as a no-op; new claims are day-namespaced") {
-    val day1 = clustered.filter($"vec_id" % 10 < 6)
-    val day2 = clustered.filter($"vec_id" % 10 >= 6)
-    val dir = java.nio.file.Files.createTempDirectory("pq_legacy").toString + "/idx"
-    assert(Pq.appendBatch(spark, day1, "vec_id", "embedding", dir,
-      batchId = 1L, nlist = 4, k = 8) == day1.count())
-    // simulate a pre-upgrade index: the applied marker under the OLD bare
-    // spelling (rename, preserving its row-count content)
-    assert(new java.io.File(s"$dir/_batches/day-1")
-      .renameTo(new java.io.File(s"$dir/_batches/1")))
-    assert(Pq.appendBatchApplied(spark, dir, 1L))
-    // the replay no-ops through the bare marker — the index is never
-    // rebuilt from a single day or double-appended
-    assert(Pq.appendBatch(spark, day1, "vec_id", "embedding", dir,
-      batchId = 1L, nlist = 4, k = 8) == -1L)
-    val ids = spark.read.parquet(dir).select("id").as[Long].collect()
-    assert(ids.length == ids.distinct.length)
-    // fresh batches claim namespaced only
-    assert(Pq.appendBatch(spark, day2, "vec_id", "embedding", dir,
-      batchId = 2L, nlist = 4, k = 8) == day2.count())
-    assert(new java.io.File(s"$dir/_batches/day-2").exists())
-    assert(!new java.io.File(s"$dir/_batches/2").exists())
-    // a bare marker for a FUTURE ingest day (legacy stream counter range)
-    // does not shadow that day
-    val future = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toEpochDay + 40
-    val out = new java.io.FileOutputStream(s"$dir/_batches/$future")
-    out.write("99".getBytes("UTF-8")); out.close()
-    assert(!Pq.appendBatchApplied(spark, dir, future))
   }
 
   test("rebuildIfDrifted: a no-drift day leaves every byte alone; drift rebuilds to fresh-build probes with replay markers intact") {

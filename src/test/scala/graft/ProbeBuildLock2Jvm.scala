@@ -46,7 +46,7 @@ object ProbeBuildLock2Jvm {
       idxPath, nlist = 4)
     val fs = new org.apache.hadoop.fs.Path(idxPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val manifest = Pq.dataFileManifest(fs, idxPath)
+    val manifest = graft.streaming.Markers.dataFileManifest(fs, idxPath)
     val digest = java.util.Arrays.hashCode(manifest.getBytes("UTF-8"))
     log(logFile, s"done cells=${idx.centroids.length} manifest=$digest")
     spark.stop()

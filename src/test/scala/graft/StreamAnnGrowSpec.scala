@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Pq
-import graft.streaming.StreamAnnGrow
+import graft.streaming.{Markers, StreamAnnGrow}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -71,10 +71,10 @@ class StreamAnnGrowSpec extends SparkTestBase {
     // checkpoint replay, driven directly: no-op, files untouched
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val before = Pq.dataFileManifest(fs, indexDir)
+    val before = Markers.dataFileManifest(fs, indexDir)
     assert(StreamAnnGrow.growBatch(spark, embDf(16 until 24),
       "vec_id", "embedding", indexDir, 1L, nlist = 4, m = 4, k = 8) == -1L)
-    assert(Pq.dataFileManifest(fs, indexDir) == before)
+    assert(Markers.dataFileManifest(fs, indexDir) == before)
     assert(StreamAnnGrow.batchApplied(spark, indexDir, 1L))
     assert(!StreamAnnGrow.batchApplied(spark, indexDir, 9L))
   }
@@ -98,19 +98,6 @@ class StreamAnnGrowSpec extends SparkTestBase {
       "vec_id", "embedding", indexDir, 3L, nlist = 4, m = 4, k = 8) == -1L)
     assert(Pq.appendBatch(spark, embDf(12 until 18),
       "vec_id", "embedding", indexDir, 3L, nlist = 4, m = 4, k = 8) == -1L)
-    // a legacy bare marker claims the mb namespace (migration rule) —
-    // and the no-op returns the DISTINCT data-drop sentinel, not the
-    // replay's -1, so an onBatch monitoring hook can alert on the
-    // one-batch drop programmatically (r17 verdict #2)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$indexDir/_batches/77"), true)
-    out.write("5".getBytes("UTF-8")); out.close()
-    assert(StreamAnnGrow.growBatch(spark, embDf(Seq(50)),
-      "vec_id", "embedding", indexDir, 77L, nlist = 4, m = 4, k = 8) ==
-      graft.streaming.Markers.BareClaimDrop)
-    // nothing from the dropped batch landed (the drop is real, and loud)
-    assert(contentRows(indexDir).size == 22)
   }
 
   test("stream and DAG racing the EMPTY index: the day-one lease serializes — one builds, the loser appends onto the winner's index") {

@@ -65,10 +65,10 @@ class StreamBm25GrowSpec extends SparkTestBase {
     // files untouched
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val before = graft.operators.Pq.dataFileManifest(fs, indexDir)
+    val before = graft.streaming.Markers.dataFileManifest(fs, indexDir)
     assert(StreamBm25Grow.growBatch(
       spark, docsDf(Seq(corpus(3), corpus(4))), indexDir, 1L, buckets = 8) == -1L)
-    assert(graft.operators.Pq.dataFileManifest(fs, indexDir) == before)
+    assert(graft.streaming.Markers.dataFileManifest(fs, indexDir) == before)
     assert(StreamBm25Grow.batchApplied(spark, indexDir, 1L))
     assert(!StreamBm25Grow.batchApplied(spark, indexDir, 9L))
   }
@@ -93,17 +93,6 @@ class StreamBm25GrowSpec extends SparkTestBase {
       spark, docsDf(corpus.take(2)), indexDir, 7L, buckets = 8) == -1L)
     assert(Bm25.appendBatch(
       spark, docsDf(Seq(corpus(2))), indexDir, 7L, buckets = 8) == -1L)
-    // a LEGACY bare marker claims the mb namespace (the migration rule):
-    // a pre-upgrade stream's counter range stays honored — and the no-op
-    // returns the DISTINCT data-drop sentinel, not the replay's -1
-    // (r17 verdict #2: an onBatch hook must tell the two apart)
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val bare = new org.apache.hadoop.fs.Path(s"$indexDir/_batches/42")
-    val out = fs.create(bare, true); out.write("9".getBytes("UTF-8")); out.close()
-    assert(StreamBm25Grow.growBatch(
-      spark, docsDf(Seq(corpus(0))), indexDir, 42L, buckets = 8) ==
-      graft.streaming.Markers.BareClaimDrop)
   }
 
   test("a crashed micro-batch retried by the checkpoint self-heals only with manifest proof; a claim with data landed reads red") {
@@ -118,7 +107,7 @@ class StreamBm25GrowSpec extends SparkTestBase {
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_batches/mb-1")
     val pre = new org.apache.hadoop.fs.Path(s"$indexDir/_batches/mb-1.pre")
     val o1 = fs.create(pre, true)
-    o1.write(graft.operators.Pq.dataFileManifest(fs, indexDir).getBytes("UTF-8"))
+    o1.write(graft.streaming.Markers.dataFileManifest(fs, indexDir).getBytes("UTF-8"))
     o1.close()
     fs.create(marker, true).close()
     assert(!StreamBm25Grow.batchApplied(spark, indexDir, 1L),

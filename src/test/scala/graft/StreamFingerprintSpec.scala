@@ -147,30 +147,6 @@ class StreamFingerprintSpec extends SparkTestBase {
       Multimodal.imagePhash, indexDir, outDir, batchId = 0L) == 0L)
   }
 
-  test("legacy bare markers claim both producers (pre-upgrade index migration)") {
-    val indexDir = Files.createTempDirectory("sfp_mig_idx").toString
-    val outDir = Files.createTempDirectory("sfp_mig_out").toString
-
-    // a pre-upgrade index: batch 42 applied under a BARE marker
-    assert(StreamFingerprint.growBatch(
-      spark, Seq((1L, base)).toDF("doc_id", "text"),
-      "doc_id", Multimodal.imagePhash, indexDir, batchId = 42L) == 9L)
-    assert(new java.io.File(s"$indexDir/_batches/day-42")
-      .renameTo(new java.io.File(s"$indexDir/_batches/42")))
-
-    // both producers treat the bare id as applied: the day's grow no-ops
-    // (no duplicate keys) and a replayed micro-batch no-ops (survivors
-    // not reprocessed)
-    assert(StreamFingerprint.growBatch(
-      spark, Seq((1L, base)).toDF("doc_id", "text"),
-      "doc_id", Multimodal.imagePhash, indexDir, batchId = 42L) == -1L)
-    assert(StreamFingerprint.applyBatch(
-      spark, Seq((1L, base)).toDF("doc_id", "text"), "doc_id",
-      Multimodal.imagePhash, indexDir, outDir, batchId = 42L) == -1L)
-    assert(spark.read.parquet(s"$indexDir/keys").count() == 9L,
-      "no duplicate keys after the claimed no-ops")
-  }
-
   test("layout stamp: a producer under a different maxHamming fails loudly on both grow and apply") {
     val indexDir = Files.createTempDirectory("sfp_conf_idx").toString
     val outDir = Files.createTempDirectory("sfp_conf_out").toString

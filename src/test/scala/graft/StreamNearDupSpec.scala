@@ -94,39 +94,6 @@ class StreamNearDupSpec extends SparkTestBase {
     assert(new java.io.File(s"$indexDir/_batches/day-$id").exists())
   }
 
-  test("legacy bare markers claim BOTH producers: a pre-upgrade index never re-applies its history") {
-    val indexDir = Files.createTempDirectory("snd_mig_idx").toString
-    val outDir = Files.createTempDirectory("snd_mig_out").toString
-
-    // a deployed pre-r14 index: day 18700 fully applied under a BARE
-    // marker (its survivors in the warehouse, its keys in the index)
-    val id = 18700L
-    val day = Seq((1L, docA), (2L, docB)).toDF("doc_id", "text")
-    assert(StreamNearDup.applyBatch(
-      spark, day, "doc_id", "text", indexDir, outDir, batchId = id,
-      namespace = StreamNearDup.DayNamespace) == 2L)
-    val dayMarker = new java.io.File(s"$indexDir/_batches/day-$id")
-    assert(dayMarker.renameTo(new java.io.File(s"$indexDir/_batches/$id")),
-      "simulate the pre-upgrade bare marker")
-
-    // after the upgrade: the bare marker claims both namespaces — neither
-    // producer re-applies (re-running would self-hit every doc against the
-    // index's own copy and empty the survivor set)
-    assert(StreamNearDup.batchApplied(spark, indexDir, id, StreamNearDup.DayNamespace))
-    assert(StreamNearDup.batchApplied(spark, indexDir, id, StreamNearDup.StreamNamespace))
-    assert(StreamNearDup.applyBatch(
-      spark, day, "doc_id", "text", indexDir, outDir, batchId = id,
-      namespace = StreamNearDup.DayNamespace) == -1L)
-    assert(StreamNearDup.applyBatch(
-      spark, day, "doc_id", "text", indexDir, outDir, batchId = id) == -1L)
-
-    // survivors and index untouched by the claimed no-ops
-    assert(spark.read.parquet(outDir).select("doc_id")
-      .as[Long].collect().toSet == Set(1L, 2L))
-    assert(spark.read.parquet(s"$indexDir/shingles").select("id")
-      .as[Long].collect().toSet == Set(1L, 2L))
-  }
-
   test("layout stamp: a producer under a different shingle n fails loudly, never silently mismatches keys") {
     val indexDir = Files.createTempDirectory("snd_conf_idx").toString
     val outDir = Files.createTempDirectory("snd_conf_out").toString
