@@ -2,7 +2,6 @@ package graft.pipelines
 
 import java.time.LocalDate
 
-import graft.sources.JsonlGz
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -11,21 +10,24 @@ import org.apache.spark.sql.functions._
   * quality gate, `tweets_and_market.py`) as a library call, for the first
   * thing an operator does after an outage: re-run a date range.
   *
-  * Per day: dead-letter the unparseable input lines, run the day's
-  * pipeline, gate on the summary actually containing rows, retry
-  * transient failures, and record an outcome — a bad day is quarantined
+  * Per day: run the day's pipeline — ONE scan of its input, which
+  * dead-letters the unparseable lines under `outputRoot/quarantine` and
+  * counts the summary on the way ([[DailyPipeline.processDay]]) — gate on
+  * the summary actually containing rows, retry transient failures, and
+  * record an outcome from the `DayRun` counts — a bad day is quarantined
   * and REPORTED, never silently skipped, and never aborts the rest of the
   * range (the reference's `depends_on_past=False` behavior).
   *
   * Idempotent by construction: every day writes to deterministic per-day
-  * paths in overwrite mode (staged summary, quarantine), so re-running a
-  * range converges to the same outputs with no duplicates — the property
+  * paths in overwrite mode (staged summary, quarantine — removed when the
+  * day has no corrupt line), so re-running a range converges to the same
+  * outputs with no duplicates and no stale dead letters — the property
   * Airflow's execution-date model gives the reference.
   *
   * Scale notes: the driver loop is per-DAY orchestration (bounded,
   * sequential, like the scheduler it replaces); all per-ROW work stays in
-  * Spark jobs. Each outcome collects one summary row — O(days) driver
-  * memory.
+  * Spark jobs, two per day: the dead-letter scan and the staged-summary
+  * write. Each outcome holds one summary row — O(days) driver memory.
   */
 object Backfill {
 
@@ -73,33 +75,18 @@ object Backfill {
       retryable = false
       last =
         try {
-          // Dead-letter the unparseable lines before the pipeline consumes
-          // the clean ones (same single-pass parse, two filtered writes).
-          val inPath = f"$inputRoot/$y%04d/$m%02d/$d%02d/*.jsonl.gz"
-          val raw = JsonlGz.read(spark, inPath, DailyPipeline.InputSchema)
-          val corrupt = JsonlGz.corrupt(raw).cache()
-          val nCorrupt = corrupt.count()
-          val qPath =
-            if (nCorrupt == 0) None
-            else {
-              val p = f"$outputRoot/quarantine/$y%04d-$m%02d-$d%02d"
-              JsonlGz.write(corrupt, p)
-              Some(p)
-            }
-          corrupt.unpersist()
-
           val run = DailyPipeline.processDay(spark, inputRoot, outputRoot, y, m, d, language)
-          // the gate: how many tweets the day actually summarized
-          val row = run.summary
+          // the gate: how many tweets the day actually summarized (the
+          // summary is a local row: reading it runs no job)
+          val n = run.summary
             .select((col("positive_count") + col("negative_count") + col("na_count"))
-              .cast("long").as("n"))
-            .collect()
-          val n = if (row.isEmpty) 0L else row(0).getLong(0)
+              .cast("long"))
+            .head().getLong(0)
           if (n >= minRows)
-            DayOutcome(date, ok = true, attempt, n, nCorrupt, qPath, None)
+            DayOutcome(date, ok = true, attempt, n, run.corruptLines, run.quarantinePath, None)
           else
             // deterministic outcome (the data IS below the gate) — no retry
-            DayOutcome(date, ok = false, attempt, n, nCorrupt, qPath,
+            DayOutcome(date, ok = false, attempt, n, run.corruptLines, run.quarantinePath,
               Some(s"quality gate: $n summarized rows < $minRows"))
         } catch {
           case e: Exception =>

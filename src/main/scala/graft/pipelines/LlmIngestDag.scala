@@ -104,13 +104,12 @@ object LlmIngestDag {
       Dag.Task("start", () => ()),
 
       // raw ingest with dead-lettering: unparseable lines go to the
-      // quarantine, clean rows to the per-date raw partition (overwrite)
+      // quarantine (removed when there are none), clean rows to the
+      // per-date raw partition (both overwrite)
       Dag.Task("ingest_raw", () => {
         val inPath = f"$inputRoot/$y%04d/$m%02d/$d%02d/*.jsonl.gz"
         val raw = JsonlGz.read(spark, inPath, InputSchema)
-        val corrupt = JsonlGz.corrupt(raw).localCheckpoint()
-        if (corrupt.count() > 0)
-          JsonlGz.write(corrupt, s"$outputRoot/quarantine/$date")
+        JsonlGz.deadLetter(raw, s"$outputRoot/quarantine/$date")
         JsonlGz.clean(raw).write.mode("overwrite").parquet(rawPath)
       }, retries = retries),
 

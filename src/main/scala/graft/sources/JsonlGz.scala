@@ -1,8 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType, StringType}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 /** Gzipped-JSONL reader/writer with explicit schema and a corrupt-record
   * policy (SURVEY §2 `sources.JsonlGz`).
@@ -23,6 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * write prunes down to. With `from_json` the corrupt column is an
   * ordinary derived column: same single scan, same codegen'd parse, no
   * restriction.
+  *
+  * Dead-lettering ([[deadLetter]]) is that single scan too: the quarantine
+  * write carries an `Observation`, so the corrupt count — and any counts
+  * the caller adds over the same rows — arrive with the write instead of
+  * costing a `cache`/`count` or checkpoint job of their own.
   */
 object JsonlGz {
 
@@ -49,6 +55,30 @@ object JsonlGz {
   /** The quarantined raw lines, for a dead-letter sink. */
   def corrupt(df: DataFrame): DataFrame =
     df.filter(col(CorruptCol).isNotNull).select(col(CorruptCol).as("raw_line"))
+
+  /** Dead-letter `df`'s corrupt lines to `path` (overwrite) in ONE job that
+    * scans `df` once, counting over every row of that scan: the corrupt
+    * lines first, then one count per `countIf` predicate. `path` is deleted
+    * when no line was corrupt, so a re-run of input that was mended never
+    * leaves a stale quarantine behind.
+    *
+    * A fresh `Observation` per call (one may observe only one query, and a
+    * retry is a new query). A failed write throws before `get`, which would
+    * otherwise block forever on metrics that never arrive.
+    */
+  def deadLetter(df: DataFrame, path: String, countIf: Column*): Seq[Long] = {
+    val obs = Observation()
+    val counts = (col(CorruptCol).isNotNull +: countIf).zipWithIndex
+      .map { case (p, i) => count_if(p).as(s"c$i") }
+    write(corrupt(df.observe(obs, counts.head, counts.tail: _*)), path)
+    val got = obs.get
+    val n = counts.indices.map(i => got(s"c$i").asInstanceOf[Long])
+    if (n.head == 0) {
+      val p = new Path(path)
+      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+    n
+  }
 
   /** Write gzipped JSONL (the reference's summary write, `tweets.py:82`). */
   def write(df: DataFrame, path: String): Unit =

@@ -29,6 +29,16 @@ class DailyPipelineSpec extends SparkTestBase {
     assert(row.getAs[Int]("positive_count") == 1)
     assert(row.getAs[Int]("negative_count") == 1)
     assert(row.getAs[Int]("na_count") == 1)
+    // the summary keeps the warehouse's columns and types
+    assert(run.summary.schema.map(f => f.name -> f.dataType) ==
+      DailyPipeline.SummarySchema.map(f => f.name -> f.dataType))
+    assert(run.summary.count() == 1)
+
+    // the same scan dead-lettered exactly the unparseable line
+    assert(run.corruptLines == 1)
+    assert(run.quarantinePath.contains(s"$root/out/quarantine/2020-01-21"))
+    val dead = spark.read.schema("raw_line STRING").json(run.quarantinePath.get)
+    assert(dead.as[String].collect().toSeq == Seq("not json at all"))
 
     // staged JSONL is re-readable with the declared warehouse schema
     val staged = JsonlGz.clean(
@@ -40,5 +50,21 @@ class DailyPipelineSpec extends SparkTestBase {
     assert(run.copySql.startsWith("COPY tweets_sentiment"))
     assert(run.qualityCheckSql ==
       "SELECT count(*) AS n FROM tweets_sentiment WHERE \"date\" = ?")
+  }
+
+  test("a day without corrupt lines leaves no quarantine directory") {
+    val root = Files.createTempDirectory("graft-daily-clean").toString
+    val dayDir = new java.io.File(s"$root/in/2020/01/22"); dayDir.mkdirs()
+    val gz = new java.io.PrintStream(
+      new java.util.zip.GZIPOutputStream(
+        new java.io.FileOutputStream(s"$dayDir/part-0.jsonl.gz")))
+    gz.println("""{"full_text": "fast", "lang": "en"}""")
+    gz.close()
+
+    val run = DailyPipeline.processDay(spark, s"$root/in", s"$root/out", 2020, 1, 22)
+    assert(run.corruptLines == 0)
+    assert(run.quarantinePath.isEmpty)
+    assert(!new java.io.File(s"$root/out/quarantine/2020-01-22").exists)
+    assert(run.summary.select("positive_count").as[Int].collect().toSeq == Seq(1))
   }
 }

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 /** Test-scope Hadoop filesystem over the local disk with injectable
   * object-store semantics, for driving [[graft.sources.BuildLock]]'s
   * reasoned-but-otherwise-unreachable store-fault branches in ScalaTest
-  * (r17 verdict Next #6):
+  * (r17 verdict Next #6), and a daily run's transient input failure:
   *
   *  - `renameNoReplace` — S3A-style rename that REFUSES to replace an
   *    existing destination (returns false), forcing renewByRename's
@@ -22,8 +22,13 @@ import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
   *    (the r17 ADVICE medium: a flaky read must never be adjudicated
   *    as a heal-out).
   *
-  * Only `.build.lock` files are ever faulted, so the artifact IO under
-  * the same scheme stays healthy. Registered per-suite via
+  *  - `failDataOpens` — the next N opens of a `.jsonl.gz` input throw
+  *    IOException, failing the scan that reads it once (a transient store
+  *    outage in the middle of a daily run, for the retry path).
+  *
+  * Only `.build.lock` files, and `.jsonl.gz` inputs while `failDataOpens`
+  * is armed, are ever faulted, so the other IO under the same scheme
+  * stays healthy. Registered per-suite via
   * `fs.faultfs.impl`; knobs are static because Hadoop caches and
   * reflectively constructs FileSystem instances.
   */
@@ -32,7 +37,8 @@ class FaultFs extends RawLocalFileSystem {
   override def getUri: URI = FaultFs.NAME
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
-    if (f.getName.endsWith(".build.lock") && FaultFs.takeOpenFault())
+    if (f.getName.endsWith(".build.lock") && FaultFs.takeOpenFault() ||
+        f.getName.endsWith(".jsonl.gz") && FaultFs.take(FaultFs.failDataOpens))
       throw new IOException(s"FaultFs: injected transient open failure for $f")
     super.open(f, bufferSize)
   }
@@ -59,6 +65,7 @@ object FaultFs {
   val skipOpens = new AtomicInteger(0)
   val failOpens = new AtomicInteger(0)
   val failRenames = new AtomicInteger(0)
+  val failDataOpens = new AtomicInteger(0)
   val refusedRenames = new AtomicInteger(0)
   @volatile var renameNoReplace = false
 
@@ -69,7 +76,7 @@ object FaultFs {
     if (take(skipOpens)) false else take(failOpens)
 
   def reset(): Unit = {
-    skipOpens.set(0); failOpens.set(0); failRenames.set(0)
+    skipOpens.set(0); failOpens.set(0); failRenames.set(0); failDataOpens.set(0)
     refusedRenames.set(0); renameNoReplace = false
   }
 }
