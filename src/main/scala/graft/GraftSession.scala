@@ -2,21 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned SparkSession factory for the graft engine.
+/** Tuned SparkSession factory for the graft engine: one base profile and
+  * two overlays on top of it.
   *
-  * Defaults are chosen for the local[32] test harness but every knob is the
-  * one you would also set on a 1000-executor cluster: AQE re-plans shuffles
-  * at runtime (partition coalescing + skew-join splitting), broadcast
-  * threshold keeps star-schema dims out of the shuffle, and shuffle
+  * The base holds every setting a local run and a 1000-executor cluster
+  * share: AQE re-plans shuffles at runtime (partition coalescing,
+  * skew-join splitting, the shuffled-hash rewrite), the broadcast
+  * threshold keeps star-schema dims out of the shuffle, the shuffle
   * partition count is sized to the parallelism actually available instead
-  * of the 200 default.
+  * of the 200 default, and the codegen cache is sized to hold a whole
+  * workload's generated classes, so a long-lived session compiles each
+  * whole-stage plan once. [[builder]] overlays a local master with the UI
+  * off; [[clusterBuilder]] overlays the scan and dynamic-allocation knobs
+  * of a cluster deployment.
   */
 object GraftSession {
 
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  private def base(shufflePartitions: Int): SparkSession.Builder =
     SparkSession
       .builder()
-      .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -35,16 +39,21 @@ object GraftSession {
         (64L * 1024 * 1024).toString)
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // A static conf: CodeGenerator's class cache reads it once per JVM,
+      // the first time codegen runs, so only the builder can set it. At
+      // Spark's default of 100 the LRU evicts a workload's classes before
+      // they are used again: one CorpusPipeline cleanV3 + auditCountsV3
+      // pass generates about 270 classes, and one perfbench index_grow
+      // iteration evicts and recompiles 76–90.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
+
+  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+    base(shufflePartitions)
+      .master(master)
       .config("spark.ui.enabled", "false")
 
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Cluster profile: the additional knobs a 1000-executor / 100 TB
-    * deployment sets on top of [[builder]]'s. Shuffle partition count
+    * deployment sets on top of the base. Shuffle partition count
     * should be ≈ 2–3× total executor cores (here parameterized);
     * `maxPartitionBytes` keeps scan tasks ≈256 MB so a 100 TB input yields
     * ~400k tasks rather than 4M; advisory partition size gives AQE a
@@ -53,23 +62,9 @@ object GraftSession {
     * rides the job's natural parallelism curve.
     */
   def clusterBuilder(shufflePartitions: Int): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // same AQE shuffled-hash rewrite as [[builder]] (per-partition
-      // bound, spill-safe fallback for oversized partitions)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        (64L * 1024 * 1024).toString)
+    base(shufflePartitions)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (256L * 1024 * 1024).toString)
       .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.dynamicAllocation.enabled", "true")
       .config("spark.dynamicAllocation.shuffleTracking.enabled", "true")
 

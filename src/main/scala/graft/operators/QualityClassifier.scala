@@ -86,12 +86,13 @@ object QualityClassifier {
       .cast("array<struct<b:int,cnt:bigint>>")
     // the ngram/bucket/sort kernel runs in the scan stage; spread a narrow
     // input first (opt guide §2.5 — no-op on multi-file production scans)
-    Spread.ifNarrow(docs)
+    Spread.ifNarrow(docs.select(
+        col(idCol), col(textCol), label.as("__label"), isTrain.as("__is_train")))
       .filter(col(textCol).isNotNull)
       .select(
         col(idCol).cast("long").as("doc_id"),
-        when(label, lit(1)).otherwise(lit(-1)).as("y"),
-        isTrain.as("is_train"),
+        when(col("__label"), lit(1)).otherwise(lit(-1)).as("y"),
+        col("__is_train").as("is_train"),
         sorted.as("__bs"))
       .withColumn("__starts", starts)
       .select(

@@ -27,11 +27,15 @@ class SpreadSpec extends SparkTestBase {
   test("an already-wide input passes through with its partitioning intact") {
     import spark.implicits._
     val target = spark.sparkContext.defaultParallelism
-    val df = (1 to 100).map(i => (i.toLong, s"t$i")).toDF("id", "text")
-      .repartition(target)
+    // a LogicalRDD leaf, so the probe runs and the width check decides
+    def checkpointed(parts: Int) = (1 to 100).map(i => (i.toLong, s"t$i")).toDF("id", "text")
+      .repartition(parts).localCheckpoint()
+    val df = checkpointed(target / 2 + 1)
     val out = Spread.ifNarrow(df)
-    assert(out.rdd.getNumPartitions == target, "guard must not re-exchange")
+    assert(out.rdd.getNumPartitions == target / 2 + 1, "guard must not re-exchange")
     assert(out eq df, "wide input must be returned unchanged")
+    // one partition fewer is still narrow: the boundary is parts * 2 <= target
+    assert(Spread.ifNarrow(checkpointed(target / 2)).rdd.getNumPartitions == target)
   }
 
   test("an exchange-bearing subtree is never probed (AQE would execute it)") {
