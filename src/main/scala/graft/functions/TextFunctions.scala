@@ -33,8 +33,18 @@ object TextFunctions {
 
   /** Count of tokens that belong to `lexicon` (duplicates counted — the
     * reference's majority vote is over occurrences, not distinct words).
+    *
+    * Backed by the native [[graft.plans.LexiconCount]] kernel: one pass
+    * over the text's bytes and one hashed lookup per token, so the cost
+    * does not grow with the lexicon. The equivalent HOF chain scans the
+    * literal word array for every token (O(|lexicon|) per token) and is
+    * kept in [[lexiconCountReference]] as the semantic spec.
     */
-  def lexiconCount(text: Column, lexicon: Seq[String]): Column = {
+  def lexiconCount(text: Column, lexicon: Seq[String]): Column =
+    graft.plans.LexiconFunctions.count(text, lexicon)
+
+  /** HOF reference implementation of [[lexiconCount]] (tested equivalent). */
+  def lexiconCountReference(text: Column, lexicon: Seq[String]): Column = {
     val lex = array(lexicon.map(lit): _*)
     size(filter(tokens(text), t => array_contains(lex, t)))
   }
@@ -44,47 +54,29 @@ object TextFunctions {
 
   /** Majority vote over token sentiments: the Spark-first twin of the
     * reference's `Counter(col).most_common(1)[0][0]` UDF (`tweets.py:56`).
-    * Tri-state like the reference: positive / negative / na.
+    * Tri-state like the reference: positive / negative / na (null text
+    * votes na).
     *
     * The no-arg form scores against the pinned [[Lexicon.Toy]] (what the
     * oracle is generated from); pass a loaded AFINN/VADER-format
-    * [[Lexicon]] for real text. Column-level scoring is O(|lexicon|) per
-    * token — fine to a few hundred words; for full-size lexicons use
-    * [[sentimentJoined]], which broadcasts the lexicon as a table.
+    * [[Lexicon]] for real text. Backed by the native
+    * [[graft.plans.LexiconVote]] kernel — one pass over the text, one
+    * hashed lookup per token, both polarities at once — so a full-size
+    * lexicon costs what the toy one does. [[overallSentimentReference]]
+    * is the semantic spec.
     */
   def overallSentiment(text: Column): Column = overallSentiment(text, Lexicon.Toy)
 
-  def overallSentiment(text: Column, lex: Lexicon): Column = {
-    val p = lexiconCount(text, lex.positive)
-    val n = lexiconCount(text, lex.negative)
-    when(p > n, "positive").when(n > p, "negative").otherwise("na")
-  }
+  def overallSentiment(text: Column, lex: Lexicon): Column =
+    graft.plans.LexiconFunctions.vote(text, lex.positive, lex.negative)
 
-  /** Sentiment against an arbitrary-size lexicon: explode tokens,
-    * broadcast-hash-join the lexicon table, re-aggregate per document —
-    * O(1) lexicon lookups per token instead of a literal-array scan, the
-    * shape that holds for a 7k-word VADER list at 100 TB. Returns `docs`'
-    * id column + `sentiment`. Majority vote counts OCCURRENCES weighted by
-    * sign, same tri-state semantics as [[overallSentiment]].
+  /** HOF reference implementation of [[overallSentiment]]: two
+    * split-filter-count chains, one per polarity (tested equivalent).
     */
-  def sentimentJoined(
-      docs: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
-      lex: Lexicon): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val lexDf = broadcast(lex.scores.toSeq.toDF("word", "valence"))
-    docs
-      .select(col(idCol), explode_outer(tokens(col(textCol))).as("word"))
-      .join(lexDf, Seq("word"), "left")
-      .groupBy(col(idCol))
-      .agg(
-        count(when(col("valence") > 0, 1)).as("p"),
-        count(when(col("valence") < 0, 1)).as("n"))
-      .select(
-        col(idCol),
-        when(col("p") > col("n"), "positive")
-          .when(col("n") > col("p"), "negative")
-          .otherwise("na").as("sentiment"))
+  def overallSentimentReference(text: Column, lex: Lexicon): Column = {
+    val p = lexiconCountReference(text, lex.positive)
+    val n = lexiconCountReference(text, lex.negative)
+    when(p > n, "positive").when(n > p, "negative").otherwise("na")
   }
 
   /** Distinct word n-gram shingles, space-joined, for MinHash / Jaccard.

@@ -14,7 +14,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * → quality gate (`tweets.py:136-142`).
   *
   * Differences from the reference are deliberate Spark-first upgrades:
-  * the majority vote is codegen'd column math instead of a Python UDF; the
+  * the majority vote is one native codegen'd expression
+  * ([[graft.plans.LexiconVote]]: one pass over the tweet's bytes, one
+  * hashed lookup per token) instead of a Python UDF; the
   * summary counts are observed by the one scan that also dead-letters the
   * corrupt lines, not an `rdd.collect()` into a dict on the driver; the
   * quality check is a returned statement, not a blocking

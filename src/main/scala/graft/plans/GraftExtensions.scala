@@ -3,6 +3,9 @@ package graft.plans
 import org.apache.spark.sql.{GraftColumnShim, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** `SparkSessionExtensions` installer: registers graft's native expressions
   * in the SQL function registry, so `spark.sql(...)` users get the same
@@ -20,7 +23,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   SELECT cosine_similarity(a.embedding, b.embedding) FROM ...
   *   SELECT minhash_signature(shingles), simhash64(tokens), lsh_buckets(v, 8, 8)
   *   SELECT shingle_set(text, 3), ngram_buckets(text, 1, 2, 1024), nfc_clean(text)
+  *   SELECT lexicon_vote(text, array('fast'), array('slow')),
+  *          lexicon_count(text, array('the', 'a'))
   * }}}
+  *
+  * Integer and word-list arguments are plan constants: they must be int
+  * literals / foldable `array<string>` literals, and anything else fails
+  * at analysis.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -130,11 +139,41 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.length == 1, "nfc_clean takes 1 argument")
         NfcClean(args(0))
+      }),
+    (
+      FunctionIdentifier("lexicon_vote"),
+      info("lexicon_vote",
+        "lexicon_vote(text, pos_words, neg_words) - one-pass lexicon majority vote: positive / negative / na"),
+      (args: Seq[Expression]) => {
+        require(args.length == 3, "lexicon_vote takes (text, pos_words, neg_words)")
+        LexiconVote(args(0), wordsLitArg(args(1), "pos_words"), wordsLitArg(args(2), "neg_words"))
+      }),
+    (
+      FunctionIdentifier("lexicon_count"),
+      info("lexicon_count",
+        "lexicon_count(text, words) - one-pass count of the text's space-split tokens found in words"),
+      (args: Seq[Expression]) => {
+        require(args.length == 2, "lexicon_count takes (text, words)")
+        new LexiconCount(args(0), wordsLitArg(args(1), "words"))
       }))
 
   private def intLitArg(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
     case other =>
       throw new IllegalArgumentException(s"$what must be an int literal, got $other")
+  }
+
+  /** The words of a foldable, non-null `array<string>` argument (null
+    * elements match no token, as in `array_contains`, so they are dropped).
+    */
+  private def wordsLitArg(e: Expression, what: String): Seq[String] = {
+    val words = e.dataType match {
+      case ArrayType(_: StringType, _) if e.foldable => e.eval()
+      case _ => null
+    }
+    if (words == null)
+      throw new IllegalArgumentException(s"$what must be an array<string> literal, got $e")
+    words.asInstanceOf[ArrayData].toArray[UTF8String](StringType).toSeq
+      .filter(_ != null).map(_.toString)
   }
 }

@@ -4,6 +4,9 @@ import java.nio.file.Files
 
 import graft.pipelines.DailyPipeline
 import graft.sources.JsonlGz
+import org.apache.spark.TestBus
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class DailyPipelineSpec extends SparkTestBase {
   import spark.implicits._
@@ -66,5 +69,34 @@ class DailyPipelineSpec extends SparkTestBase {
     assert(run.quarantinePath.isEmpty)
     assert(!new java.io.File(s"$root/out/quarantine/2020-01-22").exists)
     assert(run.summary.select("positive_count").as[Int].collect().toSeq == Seq(1))
+  }
+
+  test("the vote in processDay's executed plan is the native kernel, not a HOF chain") {
+    val root = Files.createTempDirectory("graft-daily-plan").toString
+    val dayDir = new java.io.File(s"$root/in/2020/01/23"); dayDir.mkdirs()
+    val gz = new java.io.PrintStream(
+      new java.util.zip.GZIPOutputStream(
+        new java.io.FileOutputStream(s"$dayDir/part-0.jsonl.gz")))
+    gz.println("""{"full_text": "fast fast slow", "lang": "en"}""")
+    gz.close()
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      DailyPipeline.processDay(spark, s"$root/in", s"$root/out", 2020, 1, 23)
+      TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+
+    import scala.jdk.CollectionConverters._
+    val voting = plans.asScala.filter(_.contains("lexicon_vote")).toSeq
+    assert(voting.nonEmpty, s"no executed plan carries the native vote:\n${plans.asScala.mkString("\n")}")
+    for (p <- voting)
+      assert(!p.contains("lambdafunction") && !p.contains("filter("), s"HOF vote in plan:\n$p")
   }
 }

@@ -74,4 +74,32 @@ class ExtensionsSpec extends SparkTestBase {
 
     intercept[Exception](spark.sql("SELECT ngram_buckets('x', 1, 2)").collect())
   }
+
+  test("lexicon_vote / lexicon_count from SQL equal the DataFrame API") {
+    import graft.functions.{Lexicon, TextFunctions}
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    GraftExtensions.register(spark)
+
+    val texts = Seq("fast fast slow", "slow big join", "the a the", "", null)
+    texts.toDF("text").createOrReplaceTempView("lexicon_docs")
+    def quoted(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("array(", ", ", ")")
+    val sql = spark.sql(
+      s"""SELECT text,
+         |  lexicon_vote(text, ${quoted(Lexicon.Toy.positive)}, ${quoted(Lexicon.Toy.negative)}) AS v,
+         |  lexicon_count(text, ${quoted(TextFunctions.stopWords)}) AS c
+         |FROM lexicon_docs""".stripMargin)
+    val api = texts.toDF("text").select($"text",
+      TextFunctions.overallSentiment($"text").as("v"),
+      TextFunctions.lexiconCount($"text", TextFunctions.stopWords).as("c"))
+    assert(sql.collect().toSeq == api.collect().toSeq)
+    assert(sql.collect().map(_.getString(1)).toSeq ==
+      Seq("positive", "negative", "na", "na", "na"))
+
+    // word lists are plan constants: a column or a non-string array fails
+    intercept[Exception](spark.sql(
+      "SELECT lexicon_count(text, array(text)) FROM lexicon_docs").collect())
+    intercept[Exception](spark.sql("SELECT lexicon_count('a', array(1, 2))").collect())
+    intercept[Exception](spark.sql("SELECT lexicon_vote('a', array('a'))").collect())
+  }
 }

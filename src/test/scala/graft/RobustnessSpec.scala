@@ -49,13 +49,15 @@ class RobustnessSpec extends SparkTestBase {
   }
 
   test("round-3 additions tolerate null/empty/degenerate inputs") {
-    // broadcast-join sentiment: null text explodes to a null token row,
-    // which matches no lexicon word -> "na", never a crash or a lost doc
-    val joined = TextFunctions.sentimentJoined(
-      messy, "doc_id", "text", graft.functions.Lexicon.Toy)
-      .as[(Long, String)].collect().toMap
-    assert(joined.keySet == Set(1L, 2L, 3L, 4L, 5L))
-    assert(joined(2L) == "na" && joined(3L) == "na")
+    // native vote: null and empty text vote "na" exactly as the HOF
+    // reference chain does, never a crash or a lost doc
+    val votes = messy.select($"doc_id",
+      TextFunctions.overallSentiment($"text").as("kernel"),
+      TextFunctions.overallSentimentReference($"text", graft.functions.Lexicon.Toy).as("chain"))
+      .as[(Long, String, String)].collect()
+    assert(votes.map(_._1).toSet == Set(1L, 2L, 3L, 4L, 5L))
+    assert(votes.forall(v => v._2 == v._3))
+    assert(votes.filter(v => v._1 == 2L || v._1 == 3L).forall(_._2 == "na"))
 
     // prefix-filtered jaccard: same messy tolerance as the full index
     assert(Dedup.ngramJaccardPairsPrefix(messy, "doc_id", "text")

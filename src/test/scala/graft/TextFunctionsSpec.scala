@@ -53,22 +53,104 @@ class TextFunctionsSpec extends SparkTestBase {
     assert(one[String](
       TextFunctions.overallSentiment(col("text")), "breathtaking stuff") == "na")
 
-    // broadcast-join path (the big-lexicon shape) == column path, per doc
-    val docs = Seq(
-      (1L, "fast fast slow"), (2L, "slow big join"), (3L, "nothing here"),
-      (4L, ""), (5L, "abandon outstanding outstanding")).toDF("doc_id", "text")
-    for (l <- Seq(Lexicon.Toy, lex)) {
-      val colPath = docs.select($"doc_id",
-        TextFunctions.overallSentiment($"text", l).as("sentiment"))
-        .as[(Long, String)].collect().toMap
-      val joinPath = TextFunctions.sentimentJoined(docs, "doc_id", "text", l)
-        .as[(Long, String)].collect().toMap
-      assert(joinPath == colPath, s"paths diverge for lexicon of size ${l.size}")
+    // the native kernel == the HOF reference chain, per text, both lexicons
+    for (l <- Seq(Lexicon.Toy, lex)) kernelMatchesSpec(edgeTexts, l)
+    // multi-word phrases never match a single token
+    assert(one[String](TextFunctions.overallSentiment(col("text"), lex), "can't stand") == "na")
+  }
+
+  /** Checks the native vote and count against their HOF reference chains
+    * over `texts`: once through a whole-stage-codegen stage (an RDD scan,
+    * so the projection is not folded away on the driver) and once through
+    * the expressions' interpreted `eval`. Row layout after the merge:
+    * text, vote, count, reference vote, reference count.
+    */
+  private def kernelMatchesSpec(texts: Seq[String], lex: graft.functions.Lexicon): Unit = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.plans.{LexiconCount, LexiconVote}
+
+    val words = lex.positive ++ lex.negative
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(texts.map(Row(_)), 2),
+      StructType(Seq(StructField("text", StringType))))
+    val q = df.select($"text",
+      TextFunctions.overallSentiment($"text", lex),
+      TextFunctions.lexiconCount($"text", words))
+    val stages = q.queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w.toString
     }
-    // and the join path's plan actually broadcasts the lexicon
-    val plan = TextFunctions.sentimentJoined(docs, "doc_id", "text", lex)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"))
+    assert(stages.exists(s => s.contains("lexicon_vote") && s.contains("lexicon_count")),
+      s"the kernels must run inside whole-stage codegen:\n${q.queryExecution.executedPlan}")
+    // the HOF chains disable whole-stage codegen, so they run in their own
+    // projection; an RDD scan with no shuffle keeps the row order
+    val spec = df.select(
+      TextFunctions.overallSentimentReference($"text", lex),
+      TextFunctions.lexiconCountReference($"text", words))
+    val rows = q.collect().zip(spec.collect()).map { case (k, r) => Row.fromSeq(k.toSeq ++ r.toSeq) }
+    assert(rows.map(_.getString(0)).toSeq == texts)
+
+    val text = BoundReference(0, StringType, nullable = true)
+    val vote = LexiconVote(text, lex.positive, lex.negative)
+    val count = new LexiconCount(text, words)
+    for (r <- rows) {
+      val t = r.getString(0)
+      assert(r.get(1) == r.get(3), s"vote, codegen, text=[$t]")
+      assert(r.get(2) == r.get(4), s"count, codegen, text=[$t]")
+      val in = InternalRow(UTF8String.fromString(t))
+      assert(vote.eval(in).toString == r.getString(3), s"vote, eval, text=[$t]")
+      assert(count.eval(in) == r.get(4), s"count, eval, text=[$t]")
+    }
+  }
+
+  /** Separator, encoding, case, prefix and phrase edge cases of `split(text, " ")`. */
+  private val edgeTexts: Seq[String] = Seq(
+    null, "", " ", "   ", " fast", "fast ", "fast  slow", "  fast  fast slow  ",
+    "fast\tfast slow", "fast\nfast slow", "slow\r\nslow fast",
+    "caf\u00e9 fast", "fast \ud83d\ude00 slow", "\ud83d\ude00 \ud83d\ude00", "caf\u00e9",
+    "Fast FAST fast slow", "fastest slowly fast", "fas slo",
+    "can't stand", "can't stand this slow", "outstanding can't stand abandon",
+    "fast fast slow", "slow big join", "nothing here", "the a the",
+    "breathtaking stuff", "abandon outstanding outstanding")
+
+  /** A VADER-sized lexicon: 7,500 words, multi-byte words, an AFINN phrase
+    * and the toy vocabulary among generated fillers.
+    */
+  private lazy val bigLexicon: graft.functions.Lexicon = {
+    val r = new scala.util.Random(11)
+    val fixed = Map("fast" -> 2, "slow" -> -2, "caf\u00e9" -> 1,
+      "\ud83d\ude00" -> 3, "can't stand" -> -3, "abandon" -> -2, "the" -> 1)
+    val filler = Iterator.from(0).map(i => f"w$i%05d").filterNot(fixed.contains)
+      .take(7500 - fixed.size).map(w => w -> (if (r.nextBoolean()) 1 else -1))
+    graft.functions.Lexicon(fixed ++ filler)
+  }
+
+  test("native vote and count equal the HOF reference chains: 7,500-word lexicon") {
+    assert(bigLexicon.size == 7500)
+    kernelMatchesSpec(edgeTexts, bigLexicon)
+  }
+
+  test("native vote and count equal the HOF reference chains: generated texts") {
+    val r = new scala.util.Random(5)
+    val vocab = bigLexicon.scores.keys.toVector.sorted.take(40) ++
+      Seq("fast", "slow", "Fast", "fastest", "caf\u00e9", "\ud83d\ude00", "x", "")
+    val seps = Seq(" ", " ", " ", "  ", "\t")
+    val texts = (0 until 300).map(_ =>
+      (0 until r.nextInt(25)).map(_ => vocab(r.nextInt(vocab.length)))
+        .mkString(seps(r.nextInt(seps.length))))
+    for (l <- Seq(graft.functions.Lexicon.Toy, bigLexicon)) kernelMatchesSpec(texts, l)
+  }
+
+  test("native count follows size(null) when ANSI is off") {
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try kernelMatchesSpec(Seq(null, "the a", ""), graft.functions.Lexicon.Toy)
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("token counts: whitespace vs regex") {
