@@ -42,9 +42,9 @@ object GraftSession {
       // A static conf: CodeGenerator's class cache reads it once per JVM,
       // the first time codegen runs, so only the builder can set it. At
       // Spark's default of 100 the LRU evicts a workload's classes before
-      // they are used again: one CorpusPipeline cleanV3 + auditCountsV3
-      // pass generates about 270 classes, and one perfbench index_grow
-      // iteration evicts and recompiles 76–90.
+      // they are used again: one CorpusPipeline clean + auditCounts pass
+      // under recipe V3 generates about 270 classes, and one perfbench
+      // index_grow iteration evicts and recompiles 76–90.
       .config("spark.sql.codegen.cache.maxEntries", "4000")
 
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =

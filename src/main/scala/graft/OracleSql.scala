@@ -1497,7 +1497,7 @@ object OracleSql {
     // lang -> token floor -> repetition cut (round-6 like the Spark side)
     // -> exact-dedup survivors -> minhash-pair components -> min-id
     // survivors -> stratified cap. Constants interpolated from
-    // CorpusPipeline.Config so the engines cannot drift.
+    // CorpusPipeline's Config and constants so the engines cannot drift.
     "q47_corpus_pipeline" -> {
       val c = graft.pipelines.CorpusPipeline.Config()
       s"""WITH RECURSIVE
@@ -1627,7 +1627,7 @@ object OracleSql {
          |  FROM rc GROUP BY 1),
          |s3 AS (SELECT s2.* FROM s2 JOIN ra USING (doc_id)
          |  WHERE topf <= ${c.maxTopWordFrac}),
-         |${perceptronCtes(c.clsBuckets, c.clsIters, rel = "s3", p = "pc", lead = "")},
+         |${perceptronCtes(graft.pipelines.CorpusPipeline.ClsBuckets, c.clsIters, rel = "s3", p = "pc", lead = "")},
          |s4 AS (SELECT s3.* FROM s3 JOIN pcfsc f USING (doc_id)
          |  WHERE f.score > 0),
          |s5 AS (SELECT * FROM s4 QUALIFY row_number() OVER (

@@ -448,13 +448,15 @@ object SparkEntry {
     // the r9 decision-stage chain: NFC normalize FIRST, canonical picks
     // instead of min-id survivors, cluster-keyed leak-safe split last
     "q47b_corpus_pipeline_v2" -> ((s, dir) =>
-      pipelines.CorpusPipeline.auditCountsV2(Tables.documents(s, dir))),
+      pipelines.CorpusPipeline.auditCounts(Tables.documents(s, dir),
+        recipe = pipelines.CorpusPipeline.Recipe.V2)),
 
     // the FULL production chain: v2 + the trained classifier gate after
     // the rule stages, and the train split's mixture-interleave order
     // pinned as a bit_xor checksum row
     "q47c_corpus_pipeline_v3" -> ((s, dir) =>
-      pipelines.CorpusPipeline.auditCountsV3(Tables.documents(s, dir))),
+      pipelines.CorpusPipeline.auditCounts(Tables.documents(s, dir),
+        recipe = pipelines.CorpusPipeline.Recipe.V3)),
 
     // the CROSS-MODAL variant of the v2 chain (r10 verdict #7): the
     // near-dup edge list unions the q117/q119/q120 media fingerprint
@@ -463,8 +465,9 @@ object SparkEntry {
     // modalities — a media-copy-with-rewritten-text drops here where
     // q47b keeps it
     "q47d_corpus_pipeline_xmodal" -> ((s, dir) =>
-      pipelines.CorpusPipeline.auditCountsV2(Tables.documents(s, dir),
-        pipelines.CorpusPipeline.Config(crossModalDedup = true))),
+      pipelines.CorpusPipeline.auditCounts(Tables.documents(s, dir),
+        pipelines.CorpusPipeline.Config(crossModalDedup = true),
+        pipelines.CorpusPipeline.Recipe.V2)),
 
     // bloom-filter semi-join reduction (runtime-filter pattern), gated:
     // exact semi-join count + no-false-negatives + bounded-fp booleans

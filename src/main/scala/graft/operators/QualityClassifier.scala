@@ -3,6 +3,7 @@ package graft.operators
 import graft.plans.HashFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Model-based quality FILTER trained in-query (SURVEY §2 q114) — the
   * curation stage the famous web-corpus recipes put AFTER the rule gates:
@@ -81,16 +82,24 @@ object QualityClassifier {
       i => (i === 1) || (element_at(bs, i) =!= element_at(bs, i - 1)))
     val ends = concat(slice(col("__starts"), lit(2), size(col("__starts")) - 1),
       array(n + 1))
+    // No cast to array<struct<b:int,cnt:bigint>>: the struct already has
+    // those types, and the optimizer would strip a cast that only widens
+    // containsNull, so the checkpointed frame's logical and optimized
+    // `fs` types would differ (a LogicalRDD output-mismatch warning per
+    // checkpoint). And a long doc_id passes through bare: the optimizer
+    // strips a no-op cast-and-alias, which would change its attribute id.
     val fs = zip_with(col("__starts"), ends, (s, e) =>
       struct(element_at(bs, s).as("b"), (e - s).cast("long").as("cnt")))
-      .cast("array<struct<b:int,cnt:bigint>>")
+    val id =
+      if (idCol == "doc_id" && docs.schema(idCol).dataType == LongType) col(idCol)
+      else col(idCol).cast("long").as("doc_id")
     // the ngram/bucket/sort kernel runs in the scan stage; spread a narrow
     // input first (opt guide §2.5 — no-op on multi-file production scans)
     Spread.ifNarrow(docs.select(
         col(idCol), col(textCol), label.as("__label"), isTrain.as("__is_train")))
       .filter(col(textCol).isNotNull)
       .select(
-        col(idCol).cast("long").as("doc_id"),
+        id,
         when(col("__label"), lit(1)).otherwise(lit(-1)).as("y"),
         col("__is_train").as("is_train"),
         sorted.as("__bs"))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipelines.CorpusPipeline
+import graft.pipelines.CorpusPipeline.Recipe.{V1, V2, V3}
 
 class CorpusPipelineSpec extends SparkTestBase {
   import spark.implicits._
@@ -52,7 +53,7 @@ class CorpusPipelineSpec extends SparkTestBase {
     val cfg = CorpusPipeline.Config(
       minTokens = 4, maxTopWordFrac = 0.5, jaccardThreshold = 0.6, samplePerSource = 2)
 
-    val audit = CorpusPipeline.auditCountsV2(docs, cfg)
+    val audit = CorpusPipeline.auditCounts(docs, cfg, V2)
       .as[(Int, String, Long)].collect().sortBy(_._1).toSeq
     assert(audit.map(t => (t._1, t._2)) == Seq(
       0 -> "input", 1 -> "normalize", 2 -> "lang", 3 -> "quality",
@@ -71,7 +72,7 @@ class CorpusPipelineSpec extends SparkTestBase {
     assert(byName("sample") == 4L) // s1 {6,11} + s2 capped 3 -> 2
     assert(byName("split_train") + byName("split_val") + byName("split_test") == 4L)
 
-    val cleaned = CorpusPipeline.cleanV2(docs, cfg)
+    val cleaned = CorpusPipeline.clean(docs, cfg, V2)
     val ids = cleaned.select($"doc_id".cast("long")).as[Long].collect().toSet
     // canonical pick keeps the LONGEST cluster member, not the min id
     assert(ids.contains(6L) && !ids.contains(1L))
@@ -117,12 +118,12 @@ class CorpusPipelineSpec extends SparkTestBase {
       samplePerSource = 10, mediaMaxHamming = 2)
 
     // text-only v2: shingle jaccard(1,2) = 0 — all three docs survive
-    assert(CorpusPipeline.cleanV2(docs, cfg)
+    assert(CorpusPipeline.clean(docs, cfg, V2)
       .select($"doc_id").as[Long].collect().toSet == Set(1L, 2L, 3L))
 
     // cross-modal: {1,2} cluster under the image+audio signals; equal
     // token counts so the canonical pick is the smaller id
-    val xm = CorpusPipeline.cleanV2(docs, cfg.copy(crossModalDedup = true))
+    val xm = CorpusPipeline.clean(docs, cfg.copy(crossModalDedup = true), V2)
     assert(xm.select($"doc_id").as[Long].collect().toSet == Set(1L, 3L))
     // the survivor's split key is the CROSS-MODAL component label, so a
     // media near-dup of a test doc can never straddle the split either
@@ -130,7 +131,7 @@ class CorpusPipelineSpec extends SparkTestBase {
       .select($"split_key").as[Long].collect().head == 1L)
 
     // audit shape unchanged (the flag changes the edge list, not stages)
-    val audit = CorpusPipeline.auditCountsV2(docs, cfg.copy(crossModalDedup = true))
+    val audit = CorpusPipeline.auditCounts(docs, cfg.copy(crossModalDedup = true), V2)
       .as[(Int, String, Long)].collect().sortBy(_._1).toSeq
     assert(audit.map(t => (t._2, t._3)).toMap.apply("canonical") == 2L)
   }
@@ -158,7 +159,7 @@ class CorpusPipelineSpec extends SparkTestBase {
       samplePerSource = 3, clsIters = 5,
       interleaveBp = Seq(("s1", 6000), ("s2", 4000)))
 
-    val audit = CorpusPipeline.auditCountsV3(docs, cfg)
+    val audit = CorpusPipeline.auditCounts(docs, cfg, V3)
       .as[(Int, String, Long)].collect().sortBy(_._1).toSeq
     assert(audit.map(t => (t._1, t._2)) == Seq(
       0 -> "input", 1 -> "normalize", 2 -> "lang", 3 -> "quality",
@@ -197,9 +198,9 @@ class CorpusPipelineSpec extends SparkTestBase {
     assert(byName("interleave_train_xor") == expected,
       s"train slice $trainIds checksum mismatch")
 
-    // cleanV3: the consumable frame — the expected survivors, each with
+    // clean under V3: the consumable frame — the expected survivors, each with
     // its split, and a DENSE interleave ordinal exactly on the train docs
-    val cleaned = CorpusPipeline.cleanV3(docs, cfg)
+    val cleaned = CorpusPipeline.clean(docs, cfg, V3)
       .select($"doc_id".cast("long"), $"split",
         $"ordinal".cast("long").as("ordinal"))
       .as[(Long, String, Option[Long])].collect()
@@ -242,5 +243,59 @@ class CorpusPipelineSpec extends SparkTestBase {
       .as[(Int, String, Long)].collect().sortBy(_._1).map(_._2).toSeq
     assert(defaultNames == Seq("input", "lang", "quality", "repetition",
       "exact_dedup", "near_dedup", "sample"))
+  }
+
+  // one clean survivor per source past every recipe's stages, the
+  // classifier's included (its training positives are the same shape)
+  private def urlDocs = {
+    import org.apache.spark.sql.functions.{concat, lit}
+    def pool(tag: String) = (1 to 24).map(j => s"$tag$j").mkString(" ")
+    Seq(
+      (1L, "the a of to and in is on " + pool("pa"), "s1"),
+      (2L, "the a of to and in is on " + pool("pb"), "s1"),
+      (3L, "the qz1 qz2 qz3 qz4 qz5 qz6 qz7", "s1"),
+      (4L, "the qz1 qz2 qz3 qz4 qz5 qz6 qz8", "s2"),
+      (8L, "the a of to and in is on " + pool("pc"), "s2"),
+      (12L, "the a of to and in is on " + pool("pd"), "s2"))
+      .toDF("doc_id", "text", "source")
+      .withColumn("url", concat(lit("https://example.org/"), $"doc_id"))
+  }
+  private val urlCfg = CorpusPipeline.Config(
+    minTokens = 4, maxTopWordFrac = 0.5, jaccardThreshold = 0.6,
+    samplePerSource = 3, clsIters = 5,
+    interleaveBp = Seq(("s1", 6000), ("s2", 4000)))
+
+  test("clean keeps every input column under every recipe") {
+    for (recipe <- Seq(V1, V2, V3)) {
+      val out = CorpusPipeline.clean(urlDocs, urlCfg, recipe)
+      assert(out.columns.contains("url"), s"$recipe: ${out.columns.toSeq}")
+      val rows = out.select($"doc_id", $"url").as[(Long, String)].collect()
+      assert(rows.nonEmpty, recipe)
+      assert(rows.forall { case (id, u) => u == s"https://example.org/$id" }, recipe)
+    }
+  }
+
+  test("the audit is one aggregate exchange over the union of the stage survivors") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case _ => p.children.flatMap(walk)
+    })
+    for ((recipe, cfg) <- Seq(V1 -> urlCfg, V2 -> urlCfg, V3 -> urlCfg,
+        V2 -> urlCfg.copy(crossModalDedup = true))) {
+      val audit = CorpusPipeline.auditCounts(urlDocs, cfg, recipe)
+      val rows = audit.collect()
+      // a global count per stage gathers to one partition: one such
+      // exchange in all, and the stage union sits under it
+      val gathers = walk(audit.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeLike if e.outputPartitioning == SinglePartition => e
+      }
+      assert(gathers.size == 1, s"$recipe: ${gathers.size} gathers for ${rows.length} rows")
+      assert(walk(gathers.head).exists(_.isInstanceOf[UnionExec]), recipe)
+    }
   }
 }

@@ -228,9 +228,9 @@ class PlanAuditSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike, REPARTITION_BY_NUM}
     assert(operators.Multimodal.ProductionBucketCap == 1024)
-    assert(pipelines.CorpusPipeline.Config().mediaBucketCap ==
+    assert(pipelines.CorpusPipeline.MediaBucketCap ==
       operators.Multimodal.ProductionBucketCap,
-      "the pipeline config must arm the media guard by default")
+      "the pipeline must arm the media guard")
     def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case q: QueryStageExec => walk(q.plan)

@@ -127,6 +127,20 @@ class QualityClassifierSpec extends SparkTestBase {
     assert(gated == lit_)
   }
 
+  test("featurize output keeps its attribute ids through the optimizer") {
+    // a checkpointed frame whose optimized output changes an attribute
+    // logs a LogicalRDD output-mismatch warning per checkpoint. The input
+    // is itself checkpointed, as in the pipeline: over a local relation
+    // the optimizer folds the whole plan into rows and hides the change.
+    val longIds = planted(8).localCheckpoint()
+    val intIds = longIds.select($"doc_id".cast("int").as("id"), $"text", $"good")
+    for ((docs, idCol) <- Seq(longIds -> "doc_id", intIds -> "id")) {
+      val qe = QualityClassifier.featurize(docs, $"good", lit(true), idCol = idCol).queryExecution
+      assert(qe.analyzed.output.map(a => (a.name, a.exprId, a.dataType)) ==
+        qe.optimizedPlan.output.map(a => (a.name, a.exprId, a.dataType)), idCol)
+    }
+  }
+
   test("qualityScores: an unbounded training slice is rejected") {
     val docs = planted(40)
     val ex = intercept[IllegalArgumentException] {

@@ -281,8 +281,9 @@ class RobustnessSpec extends SparkTestBase {
 
     // v2 pipeline on a corpus with no survivors at all: empty stages, no crash
     val gone = Seq((1L, "zz qq", "s1")).toDF("doc_id", "text", "source")
-    val audit = pipelines.CorpusPipeline.auditCountsV2(
-      gone, pipelines.CorpusPipeline.Config(minTokens = 4))
+    val audit = pipelines.CorpusPipeline.auditCounts(
+      gone, pipelines.CorpusPipeline.Config(minTokens = 4),
+      pipelines.CorpusPipeline.Recipe.V2)
       .as[(Int, String, Long)].collect().sortBy(_._1)
     assert(audit.length == 11 && audit.last._3 == 0L)
   }
