@@ -71,8 +71,9 @@ object Bench {
     }
 
     // noop sink: forces full computation of every output column (a count()
-    // would let Spark prune unused projections and fake the timing).
-    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // would let Spark prune unused projections and fake the timing); the
+    // trace's listener records the query's jobs and executor CPU beside it
+    def timeOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Option[QueryTrace.Record] = {
       // settle the JVM between queries: collect the previous query's
       // garbage (broadcasts are GC-released) OUTSIDE the timed region so
       // one query's allocation debt doesn't bill the next one's wall time
@@ -86,12 +87,9 @@ object Bench {
       // The sleep is outside the timer, so it costs run wall-clock, never
       // a query's reported seconds.
       Thread.sleep(250)
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
       // a failed query reports the -1.0 sentinel, never a fake wall time
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      try Some(QueryTrace.query(spark)(fn(spark, sfDir)))
+      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); None }
     }
     // Noise discipline: a single shot is hostage to page-cache state and
     // host contention (the r4 official run had 17x outliers on unchanged
@@ -124,35 +122,42 @@ object Bench {
           System.err.println(s"[bench] once-warmup $name failed: $e") }
       }
     }
+    // per query: (name, min wall, max wall, the fastest rep's record)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val ts = (1 to runs).map(_ => timeOne(name, fn))
-      val good = ts.filter(_ >= 0)
-      (name, if (good.nonEmpty) good.min else -1.0,
-        if (good.nonEmpty) good.max else -1.0)
+      val good = (1 to runs).flatMap(_ => timeOne(name, fn))
+      if (good.isEmpty) (name, -1.0, -1.0, None)
+      else {
+        val best = good.minBy(_.wallS)
+        (name, best.wallS, good.map(_.wallS).max, Some(best))
+      }
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    def r4(x: Double) = math.rint(x * 1e4) / 1e4
+    // the fastest rep's jobs and executor CPU (-1 for a failed query)
+    def perQuery(count: String) = results.map { case (k, _, _, r) =>
+      s"\"" + k + "\":" + r.fold(-1.0)(x => r4(x.count(count)))
+    }.mkString("{", ",", "}")
     // Self-diagnosis: the min is what we report, but the max/min spread
     // across the N runs is the noise meter — a query whose runs disagree
     // >3x (and whose cost is big enough for the ratio to mean anything)
     // is flagged `suspect` so an environmental outlier (page-cache
     // eviction, host contention; r4's 212.6 s run, r5's 69.3 s run)
     // adjudicates itself in the official record instead of by forensics.
-    def r4(x: Double) = math.rint(x * 1e4) / 1e4
-    val spread = results.map { case (k, lo, hi) =>
+    val spread = results.map { case (k, lo, hi, _) =>
       s"\"" + k + "\":" + (if (lo > 0) r4(hi / lo) else -1.0)
     }.mkString("{", ",", "}")
     val suspect = results.collect {
-      case (k, lo, hi) if lo > 0 && hi / lo > 3.0 && hi - lo > 0.5 => "\"" + k + "\""
+      case (k, lo, hi, _) if lo > 0 && hi / lo > 3.0 && hi - lo > 0.5 => "\"" + k + "\""
     }.mkString("[", ",", "]")
-    val failed = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }
+    val failed = results.collect { case (k, v, _, _) if v < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
+    val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
     val contentionEnd = contention()
     val contentionJson =
       s"""{"start":$contentionStart,"end":$contentionEnd}"""
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"launcher":"$launcher","queries":$qs,"spread":$spread,"suspect":$suspect,"failed":$failed,"contention":$contentionJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"launcher":"$launcher","queries":$qs,"jobs":${perQuery("jobs")},"executor_cpu_s":${perQuery("executor_cpu_s")},"spread":$spread,"suspect":$suspect,"failed":$failed,"contention":$contentionJson,"sf":"$sfDir"}"""
     // stdout must stay COMPACT: the driver captures a bounded tail of the
     // run and JSON-parses one line — the 65-query line (~3.4 KB) overflowed
     // it at r4 and the official record got "parsed": null. Per-query

@@ -99,8 +99,9 @@ object SparkEntry {
       Dedup.simHashPairs(Tables.documents(s, dir), "doc_id", "text")),
     // the Zipf-robust feature basis: distinct 3-gram shingles spread the
     // signature where head-heavy word features crowd one Hamming ball
-    // (r7 ScaleCurve: ~100x pairs per 10x docs with word features on the
-    // Zipf corpus vs ~linear with shingles)
+    // (r7: ~100x pairs per 10x docs with word features on the Zipf corpus
+    // vs ~linear with shingles; `graft.Inspect q22_dedup_simhash,q22b_dedup_simhash_shingled
+    // <dir1,dir2> 2` reads the pair volume as shuffle_read_records)
     "q22b_dedup_simhash_shingled" -> ((s, dir) =>
       Dedup.simHashPairs(Tables.documents(s, dir), "doc_id", "text", shingleN = 3)),
     "q23_ngram_jaccard" -> ((s, dir) =>

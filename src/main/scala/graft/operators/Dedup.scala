@@ -547,8 +547,10 @@ object Dedup {
     * `gate_ok` (the q24b `TRUE recall_ok` convention: the oracle cannot
     * re-derive the 2⁶⁴-wraparound signature, so it pins the boolean);
     * `detail = true` adds the raw measured columns for interactive
-    * tuning (not oracle-comparable). Small deciles (< minPairs) pass
-    * unconditionally — a 3-pair decile's empirical rate is noise.
+    * tuning (not oracle-comparable); run at sf0.001/0.01/0.1 it is the
+    * measured-vs-analytic S-curve record behind `tolerance`. Small deciles
+    * (< minPairs) pass unconditionally — a 3-pair decile's empirical rate
+    * is noise.
     *
     * Two measurement-scope caveats (deliberate, documented):
     *  - The subsample is `id < maxId`, which REQUIRES ids near 0 — on a
@@ -672,8 +674,10 @@ object Dedup {
     // (shingleN = 0, duplicates weighted) concentrate on head-heavy
     // corpora: every doc is dominated by the same frequent words, so
     // signatures crowd one Hamming ball and the true hamming<=h pair set
-    // is quadratic — the r7 ScaleCurve measured ~100x pairs per 10x docs
-    // on BOTH the 31-word and the Zipf corpus. Distinct n-gram shingle
+    // is quadratic — r7 measured ~100x pairs per 10x docs on BOTH the
+    // 31-word and the Zipf corpus (the shuffle_read_records of
+    // `graft.Inspect q22_dedup_simhash,q22b_dedup_simhash_shingled <dir1,dir2> 2`
+    // over a `GenData` size ladder). Distinct n-gram shingle
     // features (shingleN >= 2) spread the signature: shingles are
     // near-unique strings, their hashes uniform, and the pair volume
     // collapses to the true near-dup rate (~linear — measured 11x per

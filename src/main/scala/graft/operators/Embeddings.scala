@@ -109,7 +109,8 @@ object Embeddings {
     * ranking necessarily scrambles in the worst-case regime — while on
     * clustered corpora (the real ANN regime) projected neighbors keep
     * cluster identity, which EmbeddingsSpec gates directly. Returns
-    * (n_pairs, mae, mae_ok).
+    * (n_pairs, mae, mae_ok); the `mae` column of each sf's run is the
+    * measured margin under `maxMae`.
     */
   def projectionFidelityGate(
       emb: DataFrame, idCol: String = "vec_id", vecCol: String = "embedding",

@@ -285,10 +285,9 @@ object HybridRetrieval {
     Knn.recallGate(annFused, exactFused, fuseK, floor)
   }
 
-  /** The two fused rank lists [[rrfFuseAnnGate]] compares — exposed for
-    * the floor-calibration probe (ProbeHybridAnn reports the raw overlap
-    * ratio per scale; the gate reduces it to a boolean). Both as
-    * (query_id, neighbor_id).
+  /** The two fused rank lists [[rrfFuseAnnGate]] compares — exposed so a
+    * floor calibration can read the raw overlap ratio per scale (the gate
+    * reduces it to a boolean). Both as (query_id, neighbor_id).
     */
   private[graft] def annFusedLists(
       docs: DataFrame, emb: DataFrame,

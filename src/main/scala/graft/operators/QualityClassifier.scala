@@ -362,6 +362,9 @@ object QualityClassifier {
     *   FineWeb-Edu shape: a fixed annotation budget, then score
     *   everything), and `maxTrain` enforces the contract with one count
     *   job — raise it deliberately, never implicitly.
+    * `buckets` and `iters` come from a train/held-out accuracy sweep (64,
+    * 256, 1024 × 5, 10, 20 at sf0.001 and sf0.01) whose numbers were not
+    * kept; q114's `label` against `pred` per `is_train` re-measures it.
     */
   def qualityScores(
       docs: DataFrame, buckets: Int = 1024, iters: Int = 20,

@@ -49,8 +49,9 @@ object SpanDedup {
     // minLen contribute nothing (sequence upper bound < 0 → filtered).
     // gramStream localCheckpoints: the stream feeds BOTH the repeated-gram
     // count and the coverage join — without materialization each consumer
-    // re-reads and re-hashes the corpus (ScanCount measured 3 scans; the
-    // q63/q65 shared-subplan discipline). A windowed count over gh would
+    // re-reads and re-hashes the corpus (3 source scans, the file_scans of
+    // `graft.Inspect q71_span_dedup <sf> 1 --plan`; the q63/q65
+    // shared-subplan discipline). A windowed count over gh would
     // be one pass but skew-fragile: boilerplate grams — the operator's
     // whole point — would pile one window partition, where groupBy gets
     // map-side partials and the join gets AQE skew splitting.
@@ -125,7 +126,9 @@ object SpanDedup {
 
   /** The shared (doc_id, p, xxhash64(gram)) stream of q71/q78/q111,
     * materialized once per operator call (multiple consumers would
-    * otherwise each re-read and re-hash the corpus — the ScanCount trap).
+    * otherwise each re-read and re-hash the corpus — the repeated-scan
+    * trap that `graft.Inspect q71_span_dedup,q78_span_removal,q111_maximal_spans <sf> 1 --plan`
+    * counts as file_scans).
     */
   private def gramStream(toks: DataFrame, minLen: Int): DataFrame =
     toks
@@ -181,8 +184,9 @@ object SpanDedup {
     // One aggregation: repeat count + canonical (min (doc, pos)) per gram.
     // The lexicographic min is over doc_id·2^24 + p packed into ONE long —
     // `min(struct(...))` would be the obvious spelling, but struct
-    // aggregation buffers force a SortAggregate fallback (PlanSweep
-    // caught it); a long min stays in codegen'd HashAggregate. Contract:
+    // aggregation buffers force a SortAggregate fallback (the sort_aggs
+    // column of `graft.Inspect all <sf> 1 --plan` caught it); a long min
+    // stays in codegen'd HashAggregate. Contract:
     // p < 2^24 tokens per doc and doc_id < 2^39 (5·10^11 — row-count ids,
     // not hash ids; hash-keyed corpora should dense-rank first).
     val packShift = 1L << 24

@@ -179,7 +179,7 @@ object Compaction {
     val staged = new Path(stagedFlat(dirPath))
     val old = new Path(oldFlat(dirPath))
     fs.delete(staged, true)
-    fs.delete(old, true)
+    discardOld(fs, old, dirPath)
     // the SNAPSHOT read: exactly the files listed above, by path — a
     // directory read here would race concurrent appends (rows appended
     // mid-rewrite would be folded into the stage AND survive as late
@@ -215,7 +215,7 @@ object Compaction {
     val lateNames = mergeLateAppends(fs, old, snapshot, staged, dir)
     installStage(fs, staged, dir, old, lateNames, dirPath)
     fs.delete(new Path(dir, SwapReady), false)
-    fs.delete(old, true)
+    discardOld(fs, old, dirPath)
     true
   }
 
@@ -365,10 +365,26 @@ object Compaction {
     fs.delete(nested, true)
   }
 
+  /** Drop a moved-aside copy in one step: a recursive delete removes
+    * `_snapshot` before the directory, so `.old` would exist for a moment
+    * without its manifest. The rename makes `.old` vanish atomically; the
+    * debris it leaves is deleted here, or by the next writer heal after a
+    * crash.
+    */
+  private def discardOld(fs: org.apache.hadoop.fs.FileSystem, old: Path, dirPath: String): Unit = {
+    val debris = new Path(debrisFlat(dirPath))
+    fs.delete(debris, true)
+    if (fs.exists(old) && !fs.rename(old, debris))
+      throw new IllegalStateException(s"compactFlat: could not discard $old for $dirPath")
+    fs.delete(debris, true)
+  }
+
   private def stagedFlat(dirPath: String) =
     dirPath.stripSuffix("/") + ".compact.staged"
   private def oldFlat(dirPath: String) =
     dirPath.stripSuffix("/") + ".compact.old"
+  private def debrisFlat(dirPath: String) =
+    dirPath.stripSuffix("/") + ".compact.debris"
   private val SwapReady = "_swap_ready"
 
   /** Finish (any caller) or discard (writer only) an interrupted
@@ -389,7 +405,8 @@ object Compaction {
     * swap, late-append merge) instead of dropping the stage, readers
     * leave it; a leftover moved-aside copy (crash before its delete) →
     * writer preserves its post-snapshot appends then drops it, readers
-    * leave it. Readers therefore never destroy data; at worst stale
+    * leave it; a half-deleted discarded copy (`.compact.debris`) → writer
+    * deletes it. Readers therefore never destroy data; at worst stale
     * debris (or a temporarily thin refilled dir) waits for the next
     * writer pass.
     */
@@ -464,8 +481,9 @@ object Compaction {
                   s"${f.getPath} before discarding $old")
           }
       }
-      fs.delete(old, true)
+      discardOld(fs, old, dirPath)
     }
+    if (writer) fs.delete(new Path(debrisFlat(dirPath)), true)
   }
 
   /** Persist the compaction snapshot's file names into the live dir

@@ -39,7 +39,8 @@ object ShardedExport {
     require(docsPerShard > 0, "docsPerShard must be positive")
     // materialize once: the data write AND the manifest aggregation both
     // consume this — without the checkpoint the corpus scan and the
-    // two-stage prefix sum would run twice (the ScanCount trap)
+    // two-stage prefix sum would run twice (the repeated-scan trap; the
+    // file_scans of `QueryTrace(spark)(write(...))` count the passes)
     val ordered = Sampling.shuffleOrder(docs, idCol)
       .withColumn("shard", (col("ordinal") / docsPerShard).cast("int"))
       .localCheckpoint()

@@ -2,12 +2,9 @@ package graft
 
 import java.nio.file.Files
 import java.time.LocalDate
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.pipelines.{Backfill, DailyPipeline}
 import graft.sources.JsonlGz
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 
 class BackfillSpec extends SparkTestBase {
@@ -20,24 +17,6 @@ class BackfillSpec extends SparkTestBase {
         new java.io.FileOutputStream(s"$dir/part-$part.jsonl.gz")))
     lines.foreach(gz.println)
     gz.close()
-  }
-
-  /** `body`'s result and the Spark jobs it launched, counted by a listener
-    * that is removed afterwards.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    TestBus.drain(sc) // earlier suites' queued events must not be counted
-    sc.addSparkListener(counter)
-    try {
-      val out = body
-      TestBus.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(counter)
   }
 
   /** A multi-file day: 3 files of clean, off-language, retweet and corrupt
@@ -127,7 +106,8 @@ class BackfillSpec extends SparkTestBase {
     val date = LocalDate.of(2020, 4, 1)
     Backfill.run(spark, s"$root/in", s"$root/out", date, date) // warm: plan caches
 
-    val (out, jobs) = jobsOf(Backfill.run(spark, s"$root/in", s"$root/out", date, date))
+    val (out, trace) = QueryTrace(spark)(Backfill.run(spark, s"$root/in", s"$root/out", date, date))
+    val jobs = trace.jobs.size
     assert(jobs <= 2, s"one scan (dead letters + counts) and one staged write, got $jobs jobs")
     val o = out.head
     assert(o.ok && o.attempts == 1)

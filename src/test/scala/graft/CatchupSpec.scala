@@ -88,7 +88,7 @@ class CatchupSpec extends SparkTestBase {
     assert(again.isEmpty, "caught-up schedule must not re-run day dags")
   }
 
-  test("catchup-driven day batches survive a live stream's colliding counter and respect legacy bare markers") {
+  test("catchup-driven day batches survive a live stream's colliding counter") {
     import graft.streaming.StreamNearDup
     val root = Files.createTempDirectory("graft-catchup-ns").toString
     val wm = s"$root/wm"

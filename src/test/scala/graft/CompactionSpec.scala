@@ -168,19 +168,22 @@ class CompactionSpec extends SparkTestBase {
     val before = spark.read.parquet(dir).as[(Long, Long)].collect().toSet
     assert(before.size == 120)
 
+    // each attempt's row carries its attempt number in `bh`, so a retry
+    // that re-writes a batch whose first attempt had committed shows as a
+    // second (id, attempt) row, not as a duplicate the compactor made
     val committed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val appender = new Thread(() => {
       for (i <- 9000L until 9020L) {
         // an append may fail if the swap clears the dir husk mid-commit
         // (at-least-once appenders retry; the stream's marker protocol
         // replays the whole batch) — retry once, record what committed
-        def once(): Boolean =
+        def attempt(n: Long): Boolean =
           try {
-            Seq((i, i)).toDF("id", "bh").coalesce(1)
+            Seq((i, n)).toDF("id", "bh").coalesce(1)
               .write.mode("append").parquet(dir)
             true
           } catch { case _: Throwable => false }
-        if (once() || once()) committed.add(i)
+        if (attempt(1) || attempt(2)) committed.add(i)
         Thread.sleep(20)
       }
     })
@@ -192,16 +195,20 @@ class CompactionSpec extends SparkTestBase {
     assert(did, "the fragmented dir must have been compacted")
 
     import scala.jdk.CollectionConverters._
-    val want = before.map(_._1) ++ committed.asScala.toSet
     val got = spark.read.parquet(dir).as[(Long, Long)].collect().toSeq
-    assert(got.map(_._1).toSet == want,
-      s"missing=${(want -- got.map(_._1).toSet).toSeq.sorted.take(5)} " +
-        s"extra=${(got.map(_._1).toSet -- want).toSeq.sorted.take(5)}")
-    assert(got.size == got.map(_._1).distinct.size,
-      "no row may be duplicated by the snapshot-read + merge")
+    val (appended, snap) = got.partition(_._1 >= 9000L)
+    assert(snap.sorted == before.toSeq.sorted,
+      "every snapshot row exactly once, none lost, none duplicated by the snapshot-read + merge")
+    val missing = committed.asScala.toSet -- appended.map(_._1).toSet
+    assert(missing.isEmpty, s"committed appends lost: ${missing.toSeq.sorted.take(5)}")
+    assert(appended.forall(r => r._1 < 9020L && (r._2 == 1L || r._2 == 2L)),
+      s"rows no append attempt wrote: ${appended.take(5)}")
+    assert(appended.size == appended.distinct.size,
+      s"an (id, attempt) row duplicated: ${appended.diff(appended.distinct).take(5)}")
     // no debris: stage and old are gone, no nested stage dir
     assert(!new java.io.File(s"$dir.compact.staged").exists())
     assert(!new java.io.File(s"$dir.compact.old").exists())
+    assert(!new java.io.File(s"$dir.compact.debris").exists())
     assert(!new java.io.File(s"$dir/keys.compact.staged").exists())
   }
 

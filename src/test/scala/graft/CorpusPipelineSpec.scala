@@ -96,7 +96,8 @@ class CorpusPipelineSpec extends SparkTestBase {
     // the r10-verdict plant: scrambling every long word's characters
     // leaves ZERO shared word shingles (text dedup is blind to it) but
     // barely moves the deterministic containers' coarse luma/envelope —
-    // ProbeXmodalPlant: image hamming 0, audio hamming 0. A pipeline
+    // image hamming 0, audio hamming 0 (the bit count of the XOR of the two
+    // docs' `Multimodal.imagePhash` / `audioFingerprint`). A pipeline
     // that dedups per-modality keeps doc 2; the cross-modal chain makes
     // ONE component of {1, 2} and canonical-picks a single survivor.
     val base = "alpha bravo gamma delta the zulu echo foxtrot kilo lima"
@@ -105,7 +106,8 @@ class CorpusPipelineSpec extends SparkTestBase {
     // the control doc must be media-far from base in EVERY modality —
     // uniform lowercase prose is nearly envelope-flat (audio hamming 0 to
     // unrelated text!), so it mixes single letters and a descending run
-    // (ProbeXmodalPlant: img 4, aud 25, vid 26 — outside the h=2 ball)
+    // (img 4, aud 25, vid 26 bits from base by the same XOR count, with
+    // `videoFingerprint` — outside the h=2 ball)
     val control = "the zyx wvu tsr qpo nml kji hgf edc ba " +
       "z y x w v u t s r q p o n m l k j i h g f e d c b a"
     val docs = Seq(

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.pipelines.DailyPipeline
 import graft.sources.JsonlGz
-import org.apache.spark.TestBus
+import org.apache.spark.ListenerDrain
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -86,11 +86,11 @@ class DailyPipelineSpec extends SparkTestBase {
         plans.add(qe.executedPlan.toString)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    TestBus.drain(spark.sparkContext)
+    ListenerDrain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       DailyPipeline.processDay(spark, s"$root/in", s"$root/out", 2020, 1, 23)
-      TestBus.drain(spark.sparkContext)
+      ListenerDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
 
     import scala.jdk.CollectionConverters._

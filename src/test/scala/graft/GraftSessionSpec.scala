@@ -35,16 +35,27 @@ class GraftSessionSpec extends SparkTestBase {
     assert(second == 0, s"the second pass recompiled $second of the $first classes")
   }
 
-  test("no main-code file but GraftSession.scala builds its own SparkSession") {
+  /** Main-code files, but `except`, whose code (comments stripped) matches. */
+  private def mainFilesMatching(call: scala.util.matching.Regex, except: String): Seq[String] = {
     val root = new File("src/main/scala")
     assert(root.isDirectory, s"${root.getAbsolutePath} is not the main source tree")
     val comments = """(?s)/\*.*?\*/|//[^\n]*""".r
-    val call = """SparkSession\s*\.\s*builder\b""".r
-    val offenders = Files.walk(root.toPath).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "GraftSession.scala")
+    Files.walk(root.toPath).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != except)
       .filter(p => call.findFirstIn(comments.replaceAllIn(Files.readString(p), "")).isDefined)
       .map(p => root.toPath.relativize(p).toString).toSeq.sorted
+  }
+
+  test("no main-code file but GraftSession.scala builds its own SparkSession") {
+    val offenders = mainFilesMatching("""SparkSession\s*\.\s*builder\b""".r, "GraftSession.scala")
     assert(offenders.isEmpty,
       s"build sessions through GraftSession.builder or clusterBuilder: $offenders")
+  }
+
+  test("no main-code file but QueryTrace.scala attaches a SparkListener") {
+    val offenders = mainFilesMatching(
+      """\b(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener(Interface)?\b|\baddSparkListener\b""".r,
+      "QueryTrace.scala")
+    assert(offenders.isEmpty, s"record Spark work through graft.QueryTrace: $offenders")
   }
 }

@@ -428,7 +428,7 @@ class LlmIngestDagSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$mediaIdx/keys").count() == after)
   }
 
-  test("cross_day_neardup namespaces: a stream counter equal to the epoch day never no-ops the day; a legacy bare marker still no-ops a replay") {
+  test("cross_day_neardup namespaces: a stream counter equal to the epoch day never no-ops the day; day and stream markers stand side by side") {
     import graft.streaming.StreamNearDup
     val root = Files.createTempDirectory("graft-llm-ns").toString
     val d1 = LocalDate.parse("2021-05-03") // epoch day 18750

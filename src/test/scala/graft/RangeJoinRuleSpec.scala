@@ -32,7 +32,8 @@ class RangeJoinRuleSpec extends SparkTestBase {
 
   private def withBinWidth[T](w: String)(f: => T): T = {
     // AQE off for the plan assertions: AdaptiveSparkPlanExec hides its
-    // children from collect() (same caveat as PlanSweep)
+    // children from collect() (why `graft.Inspect --plan` also runs static
+    // plans)
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set(RangeJoinRule.BinWidthKey, w)

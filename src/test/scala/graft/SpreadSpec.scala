@@ -44,22 +44,14 @@ class SpreadSpec extends SparkTestBase {
       .localCheckpoint()
     val agg = docs.groupBy("src").agg(count(lit(1)).as("n"))
     val joined = docs.join(agg, Seq("src"))
-    var jobs = 0
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.TestBus.drain(sc)
-    sc.addSparkListener(counter)
-    try {
+    val (_, trace) = QueryTrace(spark) {
       assert(Spread.ifNarrow(joined) eq joined,
         "a join subtree must pass through unprobed")
       assert(Spread.ifNarrow(agg) eq agg,
         "an aggregate subtree must pass through unprobed")
-      org.apache.spark.TestBus.drain(sc) // let any (unexpected) job-start events surface
-      assert(jobs == 0, s"the guard must not execute anything, launched $jobs jobs")
-    } finally sc.removeSparkListener(counter)
+    }
+    val jobs = trace.jobs.size
+    assert(jobs == 0, s"the guard must not execute anything, launched $jobs jobs")
   }
 
   test("a streaming frame passes through untouched") {

@@ -79,7 +79,7 @@ class StreamAnnGrowSpec extends SparkTestBase {
     assert(!StreamAnnGrow.batchApplied(spark, indexDir, 9L))
   }
 
-  test("colliding mb/day counters: DAG day ids and stream micro-batch ids never shadow each other; legacy bare ids claim mb") {
+  test("colliding mb/day counters: DAG day ids and stream micro-batch ids never shadow each other; each producer's replay no-ops") {
     val indexDir = Files.createTempDirectory("sag_ns").toString + "/idx"
     // stream claims mb-3 (this builds — first touch)
     assert(StreamAnnGrow.growBatch(spark, embDf(0 until 12),
